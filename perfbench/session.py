@@ -32,9 +32,9 @@ def _meminfo_mb(key: str) -> Optional[int]:
 
 
 def heap_mb() -> int:
-    """A sixth of MemTotal, between 1 and 3 GB: the heap must fit beside
-    the Python workers and other tenants of the machine. MemTotal (not
-    MemAvailable) keeps the size, and so ``peak_rss_mb``, independent of
+    """Maximum driver heap: a sixth of MemTotal, between 1 and 3 GB, so
+    the heap fits beside the Python workers and other tenants of the
+    machine. MemTotal (not MemAvailable) keeps the limit independent of
     what else happens to run."""
     total = _meminfo_mb("MemTotal") or 8192
     return max(1024, min(3072, total // 6))
@@ -57,11 +57,16 @@ def build_spark(work_dir: str, code_root: str):
     os.environ.setdefault("PYSPARK_DRIVER_PYTHON", sys.executable)
     heap = heap_mb()
     java_opts = f"-Djava.io.tmpdir={tmp} -XX:-UsePerfData"
-    # The whole heap is committed and touched at start, so the JVM's
-    # share of ``peak_rss_mb`` is the configured heap and not the moment
-    # the collector happened to grow it; what varies is off-heap, driver
-    # and Python worker memory.
-    driver_opts = f"{java_opts} -Xms{heap}m -XX:+AlwaysPreTouch"
+    # The heap starts small (no -Xms) and grows with what the program
+    # keeps live, so ``peak_rss_mb`` follows the program's JVM memory.
+    # G1's default sizing also grows the heap when GC pauses take a
+    # large share of wall time, and adapts the young generation to pause
+    # times, which made the peak differ by up to half between runs on a
+    # 4-core, 16 GB VM; a fixed young generation, a fixed marking threshold
+    # and a GC time goal that time alone rarely triggers leave growth to
+    # the amount of live data.
+    driver_opts = (f"{java_opts} -Xmn512m -XX:GCTimeRatio=1"
+                   " -XX:-G1UseAdaptiveIHOP")
     spark = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName("perfbench")

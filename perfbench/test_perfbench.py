@@ -97,3 +97,14 @@ def test_generator_is_seeded():
            for t in [a["base"], *a["deltas"]]]
     assert sum(map(len, ids)) == len(set().union(*ids))  # disjoint slices
     assert gen.kbo_quads([3, 9]).num_rows == 2 * 16
+
+
+def test_op_that_raised_leaves_its_metrics_out():
+    import run
+    from workloads import Op
+
+    ops = [Op("build", 3.0, 10, True), Op("write", None, 0, False),
+           Op("lookup", 2.0, 5, True)]
+    m = run.e2e_metrics(40.0, ops, 900.0)
+    assert set(m) == {"setup_s", "lookup_s_p50", "peak_rss_mb"}
+    assert m["lookup_s_p50"] == (2.0, "s")

@@ -15,8 +15,8 @@ layer            wrapped call (module attribute or class method)
 pipeline         ``KGConstructionPipeline.run`` / ``run_incremental``
 pages            ``extract_page_triples`` as imported by the pipeline
 materialize      ``materialize_table``, ``read_latest_snapshot``
-local_extract    ``local_extract.extract_store_files_to_store`` (and
-                 ``local_bulk_extract``)
+local_extract    ``KGConstructionPipeline._extract_entities_sink`` (the
+                 sink-fused stage: kernel run and snapshot commit)
 extract          ``BulkCBDShapeExtractor.extract``
 linking          ``link_mentions`` as imported by the pipeline
 closure          ``connected_components_driver`` / ``connected_components``
@@ -29,9 +29,7 @@ another layer's call: the page parse and the linking join run inside
 the returned plan into Spark's ``noop`` sink inside the layer's span
 (counting its rows with an ``Observation``) and hand the untouched plan
 back to the program. That work is done twice in a traced run; it is
-part of what ``Tracer.overhead_s`` reports. The sink-fused
-extraction returns a plan the pipeline collects at once, so its span is
-held open until that ``collect()`` returns.
+part of what ``Tracer.overhead_s`` reports.
 """
 
 from __future__ import annotations
@@ -182,39 +180,14 @@ class Tracer:
             return m
         return wrapper
 
-    def _sink_fused(self, orig):
-        tracer = self
-
-        class _Collecting:
-            """The lineage plan ``extract_store_files_to_store`` returns;
-            the pipeline only ever calls ``collect()`` on it."""
-
-            def __init__(self, df, rec):
-                self._df, self._rec = df, rec
-
-            def collect(self):
-                with tracer._reopen(self._rec):
-                    rows = self._df.collect()
-                tracer.count("local_extract.quads_out",
-                             sum(r["rows"] for r in rows))
-                return rows
-
-            def __getattr__(self, name):
-                return getattr(self._df, name)
-
+    def _local_extract(self, orig):
         def wrapper(*a, **kw):
-            with self.span("local_extract") as rec:
-                df = orig(*a, **kw)
-            return _Collecting(df, rec)
+            with self.span("local_extract"):
+                m = orig(*a, **kw)
+            self.count("local_extract.quads_out",
+                       m.get("delta_rows", m["rows"]))
+            return m
         return wrapper
-
-    @contextmanager
-    def _reopen(self, rec):
-        """Continue span ``rec`` (same id, job group and parent): its end
-        moves to the end of this block."""
-        with self.span(rec["name"] + ".cont") as cont:
-            yield
-        cont["merge_into"] = rec["id"]
 
     def _closure(self, orig):
         def wrapper(edges, *a, **kw):
@@ -229,7 +202,6 @@ class Tracer:
 
     def install(self) -> "Tracer":
         from extract_cbd_shape_spark.operators import bgp as bgp_mod
-        from extract_cbd_shape_spark.operators import local_extract as le
         from extract_cbd_shape_spark.operators.extract import (
             BulkCBDShapeExtractor,
         )
@@ -246,8 +218,7 @@ class Tracer:
         for owner in (pl, mat):
             self._patch(owner, "read_latest_snapshot",
                         self._plain("materialize.read"))
-        self._patch(le, "extract_store_files_to_store", self._sink_fused)
-        self._patch(le, "local_bulk_extract", self._plain("local_extract"))
+        self._patch(P, "_extract_entities_sink", self._local_extract)
         self._patch(BulkCBDShapeExtractor, "extract", self._plain("extract"))
         self._patch(pl, "link_mentions",
                     self._driven("linking", "linking.links_out",
@@ -264,28 +235,10 @@ class Tracer:
 
     # --------------------------------------------------------- reporting
 
-    def merged(self) -> List[dict]:
-        """Spans with continuations folded into the span they continue:
-        the continued span's end and job counts extend to cover them."""
-        by_id = {s["id"]: dict(s) for s in self.spans if "end" in s}
-        for s in self.spans:
-            target = s.get("merge_into")
-            if target is None or target not in by_id:
-                continue
-            t = by_id[target]
-            t["end"] = max(t["end"], s["end"])
-            for k in ("jobs", "stages", "tasks", "failed_tasks"):
-                t[k] = t.get(k, 0) + s.get(k, 0)
-            del by_id[s["id"]]
-            for c in by_id.values():
-                if c["parent"] == s["id"]:
-                    c["parent"] = target
-        return sorted(by_id.values(), key=lambda s: s["id"])
-
     def layer_totals(self) -> dict:
         """Per span name: self time (span time minus the time its direct
         children cover), jobs, stages, tasks, failed tasks."""
-        spans = self.merged()
+        spans = [s for s in self.spans if "end" in s]
         child_time: Dict[int, float] = defaultdict(float)
         for s in spans:
             if s["parent"] is not None:
@@ -304,7 +257,7 @@ class Tracer:
         return out
 
     def overhead_s(self) -> float:
-        """Time the tracer added to the traced cycles: the ``noop``
+        """Time the tracer added to the traced ops: the ``noop``
         re-runs of lazy layers, its counting jobs and span bookkeeping."""
         T = self.layer_totals()
         return self.bookkeeping_s + sum(
@@ -313,5 +266,5 @@ class Tracer:
 
     def write(self, path: str) -> None:
         with open(path, "w") as f:
-            for s in self.merged():
+            for s in self.spans:
                 f.write(json.dumps(s, sort_keys=True) + "\n")

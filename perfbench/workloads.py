@@ -1,7 +1,8 @@
 """The benchmark's workloads: one closed-loop client, one op at a time.
 
-Each workload has a write op and a read op; one cycle is one write op
-and ``LOOKUPS_PER_CYCLE`` read ops. ``cycle()`` hands the ops to
+Each workload has a write op and a read op, and a run times exactly one
+of each, after set-up: the measured work is fixed by the workload and
+its size, never by how fast the program runs. ``ops()`` hands them to
 the runner as (kind, thunk) pairs, so an op that raises is counted as
 failed and the run goes on. Every op is checked (``verify.Checker``)
 after its timer stops.
@@ -11,26 +12,28 @@ after its timer stops.
     warehouse with ``KGConstructionPipeline.run`` (the full batch build:
     parse, sink-fused store-local extraction, linking, canonicalization,
     materialization), which also warms the JVM, and one DESCRIBE warms
-    the global engine. Each cycle then
-    commits one disjoint delta of pages with ``run_incremental`` (the
-    write op) and DESCRIBEs five entities against the latest
-    ``raw_triples`` snapshot (the read op), so writes sit beside reads,
-    per-job fixed costs are in front and the snapshot fan-out grows.
+    the global engine. The run then commits one disjoint delta of pages
+    with ``run_incremental`` (the write op: an appended snapshot over
+    the base, so the incremental stages run over the delta and the
+    graph stages over the union) and DESCRIBEs five entities against the
+    latest ``raw_triples`` snapshot, which now spans two data dirs (the
+    read op): a write beside a read, with per-job fixed costs in front.
 ``extract_global``
     Why: the only path where the global fixpoint engine
     (``BulkCBDShapeExtractor``: wave loop, broadcast joins, checkpoints,
-    driver probes) does bulk work. Each cycle extracts every member of a
+    driver probes) does bulk work. The run extracts every member of a
     cross-page KBO-style graph with an inverse shape path and writes the
     result as parquet (the write op), then DESCRIBEs five members (the
-    read op). There is no warm-up: the first extraction of a run is the
-    session's first Spark work, as in a one-shot batch job, and it
-    warms the engine for the DESCRIBE.
+    read op). There is no warm-up: the extraction is the session's first
+    Spark work, as in a one-shot batch job, and it warms the engine for
+    the DESCRIBE.
 """
 
 from __future__ import annotations
 
 import os
 import shutil
+import sys
 import time
 from dataclasses import dataclass
 from typing import List, Optional
@@ -43,7 +46,6 @@ from tracer import NullTracer
 
 DICT_SIZE = 20
 N_LOOKUP = 5  # entities per DESCRIBE
-LOOKUPS_PER_CYCLE = 1
 
 
 @dataclass
@@ -57,12 +59,11 @@ class Op:
 @dataclass
 class Size:
     base_pages: int    # pages in the base warehouse
-    delta_pages: int   # pages per delta
+    delta_pages: int   # pages in the delta
     members: int       # KBO members
-    cycles: int        # upper bound on cycles per run (deltas generated)
 
 
-# Sized so that one run (set-up plus one cycle) of each workload stays
+# Sized so that one run (set-up plus one write and one read) stays
 # near a minute on a 4-core host, so that tens of seeded runs fit in an
 # hour: the JVM start and the first (cold) Spark jobs set a floor of
 # 30-40 s per run, and both ops are dominated by per-job fixed costs at
@@ -70,8 +71,8 @@ class Size:
 # is measured. The same reason keeps the
 # warm-up to the pipeline's base build and one small DESCRIBE.
 SIZES = {
-    "full": Size(2000, 500, 12000, 2),
-    "smoke": Size(200, 50, 400, 2),
+    "full": Size(2000, 500, 12000),
+    "smoke": Size(200, 50, 400),
 }
 
 
@@ -102,12 +103,11 @@ class PipelineIncremental:
         )
 
         s = self.size
-        c = gen.corpus(self.seed, s.base_pages, s.cycles, s.delta_pages)
-        self.deltas = c["deltas"]
+        c = gen.corpus(self.seed, s.base_pages, 1, s.delta_pages)
+        self.delta = c["deltas"][0]
         self.ingested = [c["base"]]
         base_dir = self._pages(c["base"], "pages-base")
-        self.delta_dirs = [self._pages(d, f"pages-delta-{i}")
-                           for i, d in enumerate(self.deltas)]
+        self.delta_dir = self._pages(self.delta, "pages-delta")
         self.pipe = KGConstructionPipeline(self.spark, self.wh,
                                            dict_size=DICT_SIZE)
         m, sec = _timed(lambda: self.pipe.run(
@@ -116,10 +116,13 @@ class PipelineIncremental:
         # the full build warms the pipeline; one DESCRIBE warms the
         # global engine the read op runs on
         return [Op("build", sec, m["triples"]["rows"], ok),
-                self._lookup(s.cycles, 0, NullTracer(), "build")]
+                self._lookup(1, NullTracer(), "build")]
 
     def _check_commit(self, m: dict, docs: pa.Table):
-        """Checks shared by the full build and every delta."""
+        """Checks shared by the full build and the delta: the commit's
+        own raw triples are its pages' triples (and the manifest adds
+        exactly that many rows), and every graph-level table is right
+        for all pages ingested so far."""
         from extract_cbd_shape_spark.sinks.materialize import (
             latest_snapshot_paths,
         )
@@ -128,37 +131,35 @@ class PipelineIncremental:
         own = os.path.join(self.wh, "raw_triples", raw["data_dirs"][-1])
         ok_rows, n = self.checker.page_triples(docs, own)
         added = raw.get("delta_rows", raw["rows"])
-        ok_sum = (m["triples"]["rows"]
-                  == m["entity_triples"]["rows"] + m["links"]["rows"])
-        ok_links = self.checker.links(
+        graph = self.checker.graph_tables(
             pa.concat_tables(self.ingested),
-            latest_snapshot_paths(os.path.join(self.wh, "links")))
-        return ok_rows and added == n and ok_sum and ok_links, added
+            {t: latest_snapshot_paths(os.path.join(self.wh, t))
+             for t in ("entity_triples", "links", "entities", "triples")})
+        for table, good in graph.items():
+            if not good:
+                print(f"perfbench: wrong {table} table", file=sys.stderr)
+        return ok_rows and added == n and all(graph.values()), added
 
-    def cycles(self) -> int:
-        return self.size.cycles
+    def ops(self, tr) -> list:
+        return [("write", lambda: self._delta(tr)),
+                ("lookup", lambda: self._lookup(0, tr, "lookup"))]
 
-    def cycle(self, i: int, tr) -> list:
-        return [("write", lambda: self._delta(i, tr))] + [
-            ("lookup", lambda j=j: self._lookup(i, j, tr, "lookup"))
-            for j in range(LOOKUPS_PER_CYCLE)]
-
-    def _delta(self, i: int, tr) -> Op:
+    def _delta(self, tr) -> Op:
         with tr.span("op.write"):
             m, sec = _timed(lambda: self.pipe.run_incremental(
-                self.spark.read.parquet(self.delta_dirs[i]), epoch=i + 1))
-        self.ingested.append(self.deltas[i])
-        ok, rows = self._check_commit(m, self.deltas[i])
+                self.spark.read.parquet(self.delta_dir), epoch=1))
+        self.ingested.append(self.delta)
+        ok, rows = self._check_commit(m, self.delta)
         return Op("write", sec, rows, ok)
 
-    def _lookup(self, i: int, j: int, tr, kind: str) -> Op:
+    def _lookup(self, salt: int, tr, kind: str) -> Op:
         from extract_cbd_shape_spark.operators import bgp
         from extract_cbd_shape_spark.operators.extract import (
             BulkCBDShapeExtractor,
         )
         from extract_cbd_shape_spark.sinks import materialize
 
-        rng = np.random.default_rng([self.seed, i, j])
+        rng = np.random.default_rng([self.seed, salt])
         newest = self.ingested[-1].column("doc_id").to_pylist()
         every = pa.concat_tables(self.ingested)
         ids = (list(rng.choice(newest, 2, replace=False))
@@ -220,20 +221,16 @@ class ExtractGlobal:
             gen.kbo_members(keys), os.path.join(self.work, "kbo-members"), 1)
         return []
 
-    def cycles(self) -> int:
-        return self.size.cycles
+    def ops(self, tr) -> list:
+        return [("write", lambda: self._extract(tr)),
+                ("lookup", lambda: self._describe(tr))]
 
-    def cycle(self, i: int, tr) -> list:
-        return [("write", lambda: self._extract(f"out-{i}", tr))] + [
-            ("lookup", lambda j=j: self._describe(i, j, tr, "lookup"))
-            for j in range(LOOKUPS_PER_CYCLE)]
-
-    def _extract(self, name: str, tr) -> Op:
+    def _extract(self, tr) -> Op:
         from extract_cbd_shape_spark.operators.extract import (
             BulkCBDShapeExtractor,
         )
 
-        out = os.path.join(self.work, name)
+        out = os.path.join(self.work, "kbo-out")
 
         def op():
             ex = BulkCBDShapeExtractor(self.spark, shapes_graph=self.shapes,
@@ -256,13 +253,13 @@ class ExtractGlobal:
         tr.count("extract.quads_out", rows)
         return Op("write", sec, rows, ok)
 
-    def _describe(self, i: int, j: int, tr, kind: str) -> Op:
+    def _describe(self, tr) -> Op:
         from extract_cbd_shape_spark.operators import bgp
         from extract_cbd_shape_spark.operators.extract import (
             BulkCBDShapeExtractor,
         )
 
-        rng = np.random.default_rng([self.seed, i, j])
+        rng = np.random.default_rng([self.seed, 0])
         keys = rng.choice(self.orders.column("o_orderkey").to_numpy(),
                           N_LOOKUP, replace=False)
         ents = sorted(f"m:{k}" for k in keys)
@@ -284,7 +281,7 @@ class ExtractGlobal:
         got, sec = _timed(op)
         tr.count("bgp.solutions", len(got))
         tr.count("extract.quads_out", len(got))
-        return Op(kind, sec, len(got),
+        return Op("lookup", sec, len(got),
                   self.checker.describe_quads(self.quads, ents, got))
 
 
