@@ -259,56 +259,16 @@ def _q_kbo_bulk_extract_local_ext(spark, sf_dir):
 _STORE_LAYOUT_V = "v1"
 
 
-def _q_kbo_bulk_extract_store(spark, sf_dir):
+def _q_kbo_bulk_extract_filescan(spark, sf_dir):
     """Same extraction as kbo_bulk_extract over a PRE-BUCKETED store —
     the zero-shuffle flagship regime: the corpus is bucketed by store
     once at ingest (materialize_store, cached on disk per sf), then
-    extraction is scan -> Arrow kernel -> result with no exchange at
-    all. Same oracle as the other two engines."""
-    import hashlib
-    import os
-
-    from extract_cbd_shape_spark.operators.local_extract import (
-        local_bulk_extract_prebucketed,
-        materialize_store,
-        read_store,
-    )
-
-    key = hashlib.md5(f"{sf_dir}:{_STORE_LAYOUT_V}".encode()).hexdigest()[:10]
-    # RAM-backed by default (same rationale as bench scratch: the
-    # sandbox's one virtio disk is the bottleneck, not the cores).
-    cache_root = os.environ.get(
-        "SPARK_GRAFT_STORE_CACHE",
-        "/dev/shm/kbo_store_cache"
-        if os.path.isdir("/dev/shm") else "/tmp/kbo_store_cache",
-    )
-    path = os.path.join(cache_root, key)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        triples, members = kbo_members(spark, sf_dir)
-        t2, m2 = with_store_key(triples, members)
-        materialize_store(t2, m2, path)
-    shapes = ShapesGraph.from_quads(parse_trig(KBO_SHAPE_TTL))
-    return local_bulk_extract_prebucketed(
-        # input pruned at the scan (lang/datatype never traversed) and
-        # output projected inside the kernel: 8-col scan, 4-col Arrow
-        # return instead of 10/10
-        read_store(spark, path).drop("object_lang", "object_datatype"),
-        shapes_graph=shapes,
-        shape=Term(IRI, KBO_SHAPE_IRI),
-        columns=["entity", "subject", "predicate", "object_value"],
-        # synthesized KBO corpus is duplicate-free by construction
-        store_distinct=True,
-    )
-
-
-def _q_kbo_bulk_extract_filescan(spark, sf_dir):
-    """Same extraction and oracle as kbo_bulk_extract_store, but with
-    the PYTHON-NATIVE scan (local_bulk_extract_files): tasks read their
-    complete bucket parquet files directly with pyarrow inside the
-    worker, so the JVM never materializes input quad bytes — the layer
-    profile (BENCH_LAYERS.md) showed the JVM->Arrow->Python boundary
-    costs 2x the extraction kernel itself and anti-scales on the shared
-    memory bus. This is the engine's throughput flagship."""
+    each task reads its complete bucket parquet file directly with
+    pyarrow inside the worker (local_bulk_extract_files), so the JVM
+    never materializes input quad bytes — the layer profile
+    (BENCH_LAYERS.md) showed the JVM->Arrow->Python boundary costs 2x
+    the extraction kernel itself and anti-scales on the shared memory
+    bus. This is the engine's throughput flagship."""
     import hashlib
     import os
 
@@ -318,6 +278,8 @@ def _q_kbo_bulk_extract_filescan(spark, sf_dir):
     )
 
     key = hashlib.md5(f"{sf_dir}:{_STORE_LAYOUT_V}".encode()).hexdigest()[:10]
+    # RAM-backed by default (same rationale as bench scratch: the
+    # sandbox's one virtio disk is the bottleneck, not the cores).
     cache_root = os.environ.get(
         "SPARK_GRAFT_STORE_CACHE",
         "/dev/shm/kbo_store_cache"
@@ -1273,9 +1235,9 @@ def _q_bgp_path(spark, sf_dir):
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
-    """EXACTLY 50 entries. The round-3 driver artifact recorded exactly
-    50 rows and dropped exactly the last 6 dict entries (all of them
-    cheap — so not a time budget): the driver caps the correctness
+    """49 entries, under the cap: the round-3 driver artifact recorded
+    exactly 50 rows and dropped exactly the last 6 dict entries (all of
+    them cheap — so not a time budget): the driver caps the correctness
     artifact at 50 query/oracle pairs. Four operator families that used
     to spend 10 pairs are therefore verified through 4 merged
     multi-column pairs (url_canonical_dedup, text_metrics,
@@ -1339,7 +1301,6 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         "kbo_bulk_extract_local_ext": _q_kbo_bulk_extract_local_ext,
         "kbo_bulk_extract_inverse": _q_kbo_bulk_extract_inverse,
         "kbo_bulk_extract_local_inv": _q_kbo_bulk_extract_local_inv,
-        "kbo_bulk_extract_store": _q_kbo_bulk_extract_store,
         "kbo_bulk_extract_filescan": _q_kbo_bulk_extract_filescan,
         # -- streaming ------------------------------------------------------
         "page_metrics_hourly": _q_page_metrics,
@@ -1703,7 +1664,7 @@ SELECT 'm:'||k AS entity, subject, predicate, object_value FROM (
   UNION ALL SELECT k, 'a:'||k, 'kbo:postCode', (k % 9999)::VARCHAR FROM m
 )
 """,
-        "kbo_bulk_extract_store": """
+        "kbo_bulk_extract_filescan": """
 WITH m AS (SELECT o_orderkey AS k FROM orders)
 SELECT 'm:'||k AS entity, subject, predicate, object_value FROM (
   SELECT k, 'm:'||k AS subject, 'rdf:type' AS predicate,
@@ -2401,7 +2362,4 @@ GROUP BY 1
     # store-local inverse extraction: identical expected quad set as the
     # global-engine inverse query (same corpus, same shape)
     out["kbo_bulk_extract_local_inv"] = out["kbo_bulk_extract_inverse"]
-    # python-native file scan: same extraction and expected quads as the
-    # JVM-scan prebucketed engine (only the scan's physical path differs)
-    out["kbo_bulk_extract_filescan"] = out["kbo_bulk_extract_store"]
     return out

@@ -47,8 +47,8 @@ HEADLINE = [
     "kbo_bulk_extract_local",  # store-local fast path (one shuffle)
     "kbo_bulk_extract_local_inv",  # + inverse path (object-sorted CSR)
     "kbo_bulk_extract_local_ext",  # + sequence/alternative chains
-    "kbo_bulk_extract_store",  # pre-bucketed store, ZERO shuffle, JVM scan
-    "kbo_bulk_extract_filescan",  # + python-native scan (flagship)
+    "kbo_bulk_extract_filescan",  # pre-bucketed store, ZERO shuffle,
+                                  # python-native scan (flagship)
     "shape_extract_order",   # engine: CBD + blank closure + nodeLinks
     "path_closure",          # iterative transitive closure
     "minhash_lsh_dups",      # shingle -> minhash -> LSH -> verify
@@ -164,7 +164,7 @@ def _child_query(name: str) -> dict:
 
 def _child_ingest() -> dict:
     """One-time ingest cost of the zero-shuffle flagship (VERDICT r2
-    #4): kbo_bulk_extract_store reads a pre-bucketed cache, so its
+    #4): kbo_bulk_extract_filescan reads a pre-bucketed cache, so its
     query timing is the steady state; this measures the bucketing
     itself (materialize_store to a fresh directory, same RAM-backed
     medium as the cache) so the flagship claim carries its ingest
@@ -387,10 +387,9 @@ def main():
         # store with the python-native file scan (the 100 TB steady
         # state: bucket once at ingest, then every extraction is
         # worker-side read -> kernel -> sink, no quad bytes through the
-        # JVM); JVM-scan, one-shuffle store-local, and global fixpoint
+        # JVM); one-shuffle store-local and global fixpoint
         # engines alongside.
         "extract_quads_per_sec": _rate("kbo_bulk_extract_filescan"),
-        "extract_quads_per_sec_jvmscan": _rate("kbo_bulk_extract_store"),
         "extract_quads_per_sec_shuffle": _rate("kbo_bulk_extract_local"),
         "extract_quads_per_sec_global": _rate("kbo_bulk_extract"),
         "store_ingest_sec": ingest_sec,

@@ -874,8 +874,10 @@ def bgp_construct(
       (deterministic md5 labels — see `_template_position`);
     - the result is a graph, i.e. a SET of triples: one
       ``dropDuplicates`` over the quad identity (disable with
-      ``distinct=False`` when the consumer dedups anyway, e.g. a
-      `materialize_table` sink feeding `store_distinct` extraction).
+      ``distinct=False`` only when the consumer dedups anyway, e.g. a
+      default extraction; `materialize_table` writes rows as given,
+      so a snapshot of a ``distinct=False`` result must not feed
+      `store_distinct` extraction).
 
     Physical shape at 100 TB: template instantiation is a map-side
     projection of the solution join (one ``select`` per template

@@ -171,35 +171,15 @@ class BulkCBDShapeExtractor:
         resolver: Optional[Dict[str, List[Quad]]] = None,
         max_rounds: int = 32,
         max_deref_rounds: int = 8,
-        materialize_waves: bool = False,
         store_distinct: bool = False,
         broadcast_members_max: int = 2_000_000,
     ):
-        """``materialize_waves`` picks the CBD wave-loop physical
-        strategy — a genuine cost tradeoff, like exchange reuse vs
-        recompute:
-
-        * False (default): each wave checkpoints only a NARROW
-          bookkeeping slice (blank frontier + nodeLink-target rows);
-          result quads stay lazy and the star joins re-execute ONCE
-          inside the caller's final action. Write traffic scales with
-          bookkeeping, not output — measured faster at every
-          parallelism level tried (2/8/32 cores, BENCH.md), since the
-          recompute is one extra probe of an already-clustered store
-          while the full-width checkpoint is an output-sized write.
-        * True: each wave's star join is checkpointed at full quad
-          width; result quads, path targets, trie words and the blank
-          frontier are projections of it, and the final dedup reads
-          checkpoints instead of re-running joins. Candidate when the
-          downstream action is much wider than the bookkeeping slice
-          (e.g. several separate actions re-consume the waves) or
-          executor-local NVMe makes output-sized writes cheap.
-
-        ``store_distinct`` is a caller contract: the triples input has
-        no duplicate rows (true for snapshots this package writes —
-        materialize_table output is deduplicated — and for any store
-        ingested through a distinct). Under that contract the engine's
-        pure-CBD output is duplicate-free by construction for
+        """``store_distinct`` is a caller contract: the triples input has
+        no duplicate rows (true for any store ingested through a
+        distinct). A ``materialize_table`` snapshot does NOT imply it:
+        the sink writes its frame as given, so a snapshot repeats
+        whatever quads its input repeated. Under that contract the
+        engine's pure-CBD output is duplicate-free by construction for
         default-graph quads (CBD frontiers are globally disjoint on
         (member, node), so each store row joins each member at most
         once), and the final uniqueQuads dedup (lib/Utils.ts:44-64)
@@ -243,7 +223,6 @@ class BulkCBDShapeExtractor:
         self.resolver = resolver or {}
         self.max_rounds = max_rounds
         self.max_deref_rounds = max_deref_rounds
-        self.materialize_waves = materialize_waves
         self.store_distinct = store_distinct
         self.broadcast_members_max = broadcast_members_max
         # persisted store copies / trie caches created by runs of this
@@ -256,9 +235,8 @@ class BulkCBDShapeExtractor:
         parts). Call once the returned result/flags DataFrames have been
         fully consumed — long-lived drivers that extract repeatedly
         would otherwise accumulate corpus-sized cache entries per run.
-        Results stay CORRECT after release (with ``materialize_waves=
-        False`` a later action re-runs its star joins against the
-        un-cached store — slower, never wrong). Unpersisting an
+        Results stay CORRECT after release (a later action re-runs its
+        star joins against the un-cached store — slower, never wrong). Unpersisting an
         already-released DataFrame is a no-op, so calling this between
         every extraction is safe."""
         for df in self._persisted:
@@ -562,7 +540,7 @@ class _Run:
         # both sides per probe. None = unknown (scale mode).
         self._visited_cbd_n: Optional[int] = 0 if self.latency else None
         self.processed_parts: List[DataFrame] = []  # for deref flagging
-        # Lean-mode CBD emission: per-wave star joins are NOT appended
+        # CBD emission: per-wave star joins are NOT appended
         # to result_parts individually — their (disjoint) frontiers
         # accumulate here and ONE fused (union-of-frontiers x store)
         # join emits every CBD quad in the final action (see execute).
@@ -711,19 +689,23 @@ class _Run:
              target_preds: frozenset = frozenset()) -> Optional[DataFrame]:
         """CBD star + blank-node closure (lib/CBDShapeExtractor.ts:472-508).
 
-        Emits quads into result_parts and words into trie_parts; maintains
-        the global per-member blank-visited set. Returns the wave-0 star
+        Records each wave's frontier for the fused CBD emission in
+        execute() and words into trie_parts; maintains the global
+        per-member blank-visited set. Returns the wave-0 star
         rows projected to the nodeLink-target columns, so the simple-path
         stage and nodeLink target derivation reuse the wave join instead
         of re-running the same (frontier x store) join (VERDICT r2 #1:
         one materialization per wave).
 
-        Physical strategy per ``materialize_waves`` (see the extractor
-        ctor): the wave join is either checkpointed at full quad width
-        (results/targets/frontier read it back) or kept lazy with only a
-        narrow (blank frontier + rows matching ``target_preds``)
-        bookkeeping checkpoint, results re-executing once in the final
-        action.
+        Physical strategy: the wave join stays lazy; each
+        wave checkpoints only a NARROW bookkeeping slice (blank frontier
+        + rows matching ``target_preds``), and result quads re-execute
+        ONCE in the caller's final action. Write traffic scales with
+        bookkeeping, not output — measured faster than full-width wave
+        checkpoints at every parallelism tried (2/8/32 cores,
+        BENCH.md): the recompute is one extra probe of an
+        already-clustered store, a full-width checkpoint an
+        output-sized write.
 
         Memo-revisited wave-0 nodes (reference: extractRecursively always
         re-runs the star; only the BLANK recursion is guarded,
@@ -806,7 +788,6 @@ class _Run:
             return out
 
         star_parts: List[DataFrame] = []
-        materialize = self.ex.materialize_waves
         # Wave frontier row count (latency mode): wave 0 is bounded by
         # the round's work set; later waves by the blank-children count
         # taken at the wave checkpoint (it doubles as emptiness probe).
@@ -825,32 +806,21 @@ class _Run:
         wave = 0
         while True:
             joined = star_join(frontier, extra if wave == 0 else [], f_count)
-            if materialize:
-                # ONE materialization per wave, at full quad width:
-                # result quads, trie words, blank frontier and (wave 0)
-                # the path targets are projections of this checkpoint;
-                # the join never re-executes — the final dedup reads it.
-                joined = joined.localCheckpoint()
-                if wave == 0:
-                    star_parts.append(tproj(joined))
-                self.result_parts.append(
-                    joined.select("member_id", *QUAD_COLS))
-            else:
-                # Lean mode: don't emit this wave's join as its own lazy
-                # result part (the final action would then re-probe the
-                # persisted store once PER WAVE — k corpus streams).
-                # Record the frontier instead; execute() emits all CBD
-                # quads with ONE fused join over the union of frontiers.
-                # Equivalent because frontiers are globally disjoint on
-                # (member, node) (visited_cbd) and every wave applies
-                # the same row filters.
-                self._cbd_emit_frontiers.append(
-                    frontier.select(
-                        "member_id", "entity", "entity_kind",
-                        "node", "node_kind",
-                    )
+            # Don't emit this wave's join as its own lazy
+            # result part (the final action would then re-probe the
+            # persisted store once PER WAVE — k corpus streams).
+            # Record the frontier instead; execute() emits all CBD
+            # quads with ONE fused join over the union of frontiers.
+            # Equivalent because frontiers are globally disjoint on
+            # (member, node) (visited_cbd) and every wave applies
+            # the same row filters.
+            self._cbd_emit_frontiers.append(
+                frontier.select(
+                    "member_id", "entity", "entity_kind",
+                    "node", "node_kind",
                 )
-                self._cbd_emit_counts.append(f_count)
+            )
+            self._cbd_emit_counts.append(f_count)
             self.trie_parts.append(words(joined))
             blank_children = (
                 joined.filter(F.col("object_kind") == BLANK)
@@ -873,54 +843,49 @@ class _Run:
                     F.first("entity_kind").alias("entity_kind"),
                 )
             )
-            if materialize:
-                # tiny; several consumers (emptiness probe, next wave's
-                # join, visited anti-joins) — one small write wins
-                nxt = blank_children.localCheckpoint()
+            # ONE fused job per wave — the star join, the
+            # blank-children anti-join AND the next-frontier claim
+            # aggregate all run inside a single checkpoint; the
+            # emptiness probe and every later consumer (next wave's
+            # join, visited anti-joins) read materialized rows
+            # instead of re-running the aggregate (r2 profile: the
+            # probe-and-recompute pattern cost ~0.6s of fixed serial
+            # time per wave at 4 cores). Results and trie words stay
+            # lazy on ``joined`` and re-execute once in the caller's
+            # final action.
+            tp = sorted(target_preds) if wave == 0 else []
+            if tp:
+                # Wave-0 additionally needs the nodeLink-target rows:
+                # they share the SAME checkpoint as the frontier,
+                # told apart by a NULL predicate (impossible for a
+                # real quad; the frontier marker rows carry the
+                # claimed node in the object columns).
+                markers = blank_children.select(
+                    "member_id", "entity", "entity_kind",
+                    *[F.lit(None).cast("string").alias(c) for c in extra],
+                    F.lit(None).cast("string").alias("predicate"),
+                    F.col("node").alias("object_value"),
+                    F.col("node_kind").alias("object_kind"),
+                    F.lit(None).cast("string").alias("object_lang"),
+                    F.lit(None).cast("string").alias("object_datatype"),
+                    F.col("pos").alias("_new_pos"),
+                )
+                combined = (
+                    joined.filter(F.col("predicate").isin(tp))
+                    .select(*target_cols)
+                    .unionByName(markers)
+                    .localCheckpoint()
+                )
+                star_parts.append(
+                    combined.filter(F.col("predicate").isNotNull()))
+                nxt = combined.filter(F.col("predicate").isNull()).select(
+                    "member_id", "entity", "entity_kind",
+                    F.col("object_value").alias("node"),
+                    F.col("object_kind").alias("node_kind"),
+                    F.col("_new_pos").alias("pos"),
+                )
             else:
-                # Lean mode: ONE fused job per wave — the star join, the
-                # blank-children anti-join AND the next-frontier claim
-                # aggregate all run inside a single checkpoint; the
-                # emptiness probe and every later consumer (next wave's
-                # join, visited anti-joins) read materialized rows
-                # instead of re-running the aggregate (r2 profile: the
-                # probe-and-recompute pattern cost ~0.6s of fixed serial
-                # time per wave at 4 cores). Results and trie words stay
-                # lazy on ``joined`` and re-execute once in the caller's
-                # final action — the lean-mode contract.
-                tp = sorted(target_preds) if wave == 0 else []
-                if tp:
-                    # Wave-0 additionally needs the nodeLink-target rows:
-                    # they share the SAME checkpoint as the frontier,
-                    # told apart by a NULL predicate (impossible for a
-                    # real quad; the frontier marker rows carry the
-                    # claimed node in the object columns).
-                    markers = blank_children.select(
-                        "member_id", "entity", "entity_kind",
-                        *[F.lit(None).cast("string").alias(c) for c in extra],
-                        F.lit(None).cast("string").alias("predicate"),
-                        F.col("node").alias("object_value"),
-                        F.col("node_kind").alias("object_kind"),
-                        F.lit(None).cast("string").alias("object_lang"),
-                        F.lit(None).cast("string").alias("object_datatype"),
-                        F.col("pos").alias("_new_pos"),
-                    )
-                    combined = (
-                        joined.filter(F.col("predicate").isin(tp))
-                        .select(*target_cols)
-                        .unionByName(markers)
-                        .localCheckpoint()
-                    )
-                    star_parts.append(
-                        combined.filter(F.col("predicate").isNotNull()))
-                    nxt = combined.filter(F.col("predicate").isNull()).select(
-                        "member_id", "entity", "entity_kind",
-                        F.col("object_value").alias("node"),
-                        F.col("object_kind").alias("node_kind"),
-                        F.col("_new_pos").alias("pos"),
-                    )
-                else:
-                    nxt = blank_children.localCheckpoint()
+                nxt = blank_children.localCheckpoint()
             if self.latency:
                 # Latency mode: the emptiness probe is a count over the
                 # just-checkpointed rows — same single cheap job, and
@@ -1297,7 +1262,7 @@ class _Run:
             )
 
         # Wide mode: when CBD emission runs as the ONE fused
-        # (union-of-frontiers x store) join (lean mode), the member
+        # (union-of-frontiers x store) join, the member
         # attribute columns are attached to the SMALL side (the
         # frontier union / the pickup's member side) before the store
         # join, so the final action never joins the corpus-sized output
@@ -1307,8 +1272,7 @@ class _Run:
         # and reconciled against the CBD emission on its own (small)
         # slice, so the corpus-sized CBD bulk STREAMS with no
         # full-output exchange at all (see the witness handling below).
-        # Duplicated stores and materializing-wave runs keep the legacy
-        # narrow layout + full-output dedup.
+        # Duplicated stores keep the narrow layout + full-output dedup.
         lean = bool(self._cbd_emit_frontiers)
         witness_parts = list(self.result_parts)
         small_witness = lean and self.ex.store_distinct and bool(witness_parts)
@@ -1319,7 +1283,7 @@ class _Run:
             self.result_parts = []
         attr_cols = ["entity", "entity_kind", "shape_key", "input_idx"]
 
-        # Lean-mode fused CBD emission: one (union-of-frontiers x store)
+        # Fused CBD emission: one (union-of-frontiers x store)
         # join replaces k per-wave lazy joins in the final action — the
         # persisted store streams ONCE instead of once per wave. The
         # filters mirror _cbd.star_join exactly; results never need the

@@ -17,20 +17,6 @@ from pyspark.sql import functions as F
 from extract_cbd_shape_spark.model import BLANK, IRI, LITERAL, XSD_INTEGER, XSD_STRING
 
 
-def _quad(sub, sk, pred, ov, ok, dt=None):
-    return [
-        sub.alias("subject"),
-        F.lit(sk).cast("tinyint").alias("subject_kind"),
-        F.lit(pred).alias("predicate"),
-        ov.alias("object_value"),
-        F.lit(ok).cast("tinyint").alias("object_kind"),
-        F.lit(None).cast("string").alias("object_lang"),
-        F.lit(dt).cast("string").alias("object_datatype"),
-        F.lit(None).cast("string").alias("graph"),
-        F.lit(None).cast("tinyint").alias("graph_kind"),
-    ]
-
-
 def tpch_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     par = spark.sparkContext.defaultParallelism
     # small single-row-group parquet reads as 1 partition; fan out so

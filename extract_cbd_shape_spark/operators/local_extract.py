@@ -779,15 +779,6 @@ def compile_single_hop_links(shapes_graph: Optional[ShapesGraph],
             mp_match, mp_link)
 
 
-def _anti(left: pd.DataFrame, right: pd.DataFrame, cols: List[str]) -> pd.DataFrame:
-    """left rows whose key tuple does not appear in right (merge anti-join)."""
-    if left.empty or right.empty:
-        return left
-    m = left.merge(right[cols].drop_duplicates(), on=cols, how="left",
-                   indicator=True)
-    return m[m["_merge"] == "left_only"].drop(columns="_merge")
-
-
 def _vec_extract_bucket(
     tpdf: pd.DataFrame,
     mpdf: pd.DataFrame,
@@ -1448,23 +1439,25 @@ def _marker_stream(triples: DataFrame, members: DataFrame,
 
 
 def _make_runner(
-    vec_plan,
-    shapes_local: Optional[ShapesGraph],
-    shape_local: Optional[Term],
-    ignore_local: Tuple[tuple, ...],
+    shapes_graph: Optional[ShapesGraph],
+    shape: Optional[Term],
+    store_col: str,
     bulk: bool,
     cbd_default_graph: bool,
-    store_col: str,
+    graphs_to_ignore: Sequence[Term],
+    vectorize: bool,
     members_from_subjects: bool,
-    cols: List[str],
-    exclude_stores: frozenset = frozenset(),
+    columns: Optional[Sequence[str]],
+    exclude_stores: Sequence[str] = (),
     store_distinct: bool = False,
 ):
-    """Build the mapInArrow partition function. ``members_from_subjects``
-    derives the member set per store inside the kernel (every distinct
-    IRI subject of the store — the crawl/pipeline regime) instead of
-    reading marker rows, which lets callers skip the seed-distinct
-    shuffle entirely.
+    """Build the mapInArrow partition function shared by every entry
+    point; returns ``(run_partition, cols)``, ``cols`` being the result
+    columns it emits (``columns`` or all of ``OUT_COLS``).
+    ``members_from_subjects`` derives the member set per store inside
+    the kernel (every distinct IRI subject of the store — the
+    crawl/pipeline regime) instead of reading marker rows, which lets
+    callers skip the seed-distinct shuffle entirely.
 
     The boundary is ``mapInArrow`` + Arrow-backed pandas, not
     ``mapInPandas``: converting millions of quad strings to numpy
@@ -1474,6 +1467,13 @@ def _make_runner(
     the Arrow buffers through every merge."""
     import pyarrow as pa
 
+    # Vectorized fast path: single-hop forward-predicate shape DAGs run
+    # as columnar merges over the whole bucket (no per-member Python).
+    vec_plan = compile_single_hop_links(
+        shapes_graph, shape, cbd_default_graph) if vectorize else None
+    cols = list(columns) if columns is not None else OUT_COLS
+    ignore = tuple((g.kind, g.value) for g in graphs_to_ignore)
+    exclude_stores = frozenset(exclude_stores)
     out_schema = pa.schema(
         [
             pa.field(c, pa.int8() if _RESULT_TYPES[c] == "tinyint"
@@ -1523,8 +1523,8 @@ def _make_runner(
             # The interpreter dedups its own output; the CSR kernel
             # emits gathered input rows, so dedup the input per store
             # here. store_distinct=True is the caller's contract that
-            # the corpus is duplicate-free (e.g. any materialize_table
-            # snapshot) and skips the pass.
+            # the corpus is duplicate-free (e.g. ingested through a
+            # distinct) and skips the pass.
             tpdf = tpdf.drop_duplicates(
                 [c for c in (store_col, "subject", "subject_kind",
                              "predicate", "object_value", "object_kind",
@@ -1534,7 +1534,7 @@ def _make_runner(
         if vec_plan is not None:
             yield from _emit(_vec_extract_bucket(
                 tpdf, mpdf, store_col, vec_plan, bulk,
-                cbd_default_graph, set(ignore_local), cols,
+                cbd_default_graph, set(ignore), cols,
             ))
             return
         out_rows: List[tuple] = []
@@ -1567,15 +1567,15 @@ def _make_runner(
             if not quads:
                 continue
             out_rows.extend(
-                extract_store(quads, mlist, shapes_local, shape_local,
+                extract_store(quads, mlist, shapes_graph, shape,
                               bulk=bulk,
-                              graphs_to_ignore=ignore_local,
+                              graphs_to_ignore=ignore,
                               cbd_default_graph=cbd_default_graph)
             )
         if out_rows:
             yield from _emit(pd.DataFrame(out_rows, columns=OUT_COLS)[cols])
 
-    return run_partition
+    return run_partition, cols
 
 
 OUT_COLS = ["entity", "subject", "subject_kind", "predicate",
@@ -1595,12 +1595,12 @@ def materialize_store(
 
     This is the 100 TB layout: the corpus is shuffled by store ONCE when
     it lands, and every subsequent extraction over it
-    (``local_bulk_extract_prebucketed``) runs with ZERO exchanges —
-    scan -> per-store kernel -> sink, embarrassingly parallel. The
-    production target is an Iceberg table ``partitionedBy(bucket(N,
-    store))``; on plain parquet one file per hash bucket gives the same
-    guarantee as long as readers never split a file (see
-    ``read_store``).
+    (``local_bulk_extract_files`` / ``extract_store_files_to_store``)
+    runs with ZERO exchanges — per-file read -> per-store kernel ->
+    sink, embarrassingly parallel. The production target is an Iceberg
+    table ``partitionedBy(bucket(N, store))``; on plain parquet one
+    file per hash bucket gives the same guarantee, since the readers
+    hand each task whole files.
 
     ``members=None`` writes quads only — for corpora whose member set is
     derivable per store (every IRI subject: the crawl regime), extracted
@@ -1623,129 +1623,52 @@ def materialize_store(
     return path
 
 
-def read_store(spark: SparkSession, path: str) -> DataFrame:
-    """Read a ``materialize_store`` table preserving store-completeness
-    per task: raises ``spark.sql.files.maxPartitionBytes`` above the
-    largest data file so the scan never SPLITS a file (splitting could
-    cut a store in half mid-file; COMBINING whole files is always safe —
-    a task then simply holds several complete buckets).
-
-    The raised value lives in a CLONED session (same SparkContext,
-    copy-on-write SQLConf), never the caller's: file-scan partitioning
-    reads the conf at execution time, so a session-wide set would
-    inflate partition sizing for every later unrelated scan (ADVICE r2,
-    low). The returned DataFrame is bound to the clone; it composes with
-    the caller's DataFrames normally (one shared context)."""
-    import os
-
-    biggest = 0
-    for root, _dirs, files in os.walk(path):
-        for fn in files:
-            if fn.endswith(".parquet"):
-                biggest = max(biggest, os.path.getsize(os.path.join(root, fn)))
-    raw = spark.conf.get(
-        "spark.sql.files.maxPartitionBytes", "134217728").strip().lower()
-    units = {"k": 1024, "m": 1024 ** 2, "g": 1024 ** 3, "t": 1024 ** 4}
-    s = raw[:-1] if raw.endswith("b") else raw
-    mult = 1
-    if s and s[-1] in units:
-        mult, s = units[s[-1]], s[:-1]
-    cur = int(s) * mult
-    if biggest >= cur:
-        scoped = SparkSession(
-            spark.sparkContext, spark._jsparkSession.cloneSession()
-        )
-        scoped.conf.set(
-            "spark.sql.files.maxPartitionBytes", str(biggest + 1))
-        return scoped.read.parquet(path)
-    return spark.read.parquet(path)
-
-
-def local_bulk_extract_prebucketed(
-    store: DataFrame,
-    shapes_graph: Optional[ShapesGraph] = None,
-    shape: Optional[Term] = None,
-    store_col: str = "store_key",
-    bulk: bool = True,
-    cbd_default_graph: bool = False,
-    graphs_to_ignore: Sequence[Term] = (),
-    vectorize: bool = True,
-    members_from_subjects: bool = False,
-    columns: Optional[Sequence[str]] = None,
-    store_distinct: bool = False,
-) -> DataFrame:
-    """Zero-shuffle extraction over a pre-bucketed store.
-
-    ``store`` is a ``materialize_store`` table (via ``read_store``) or
-    any DataFrame whose partitioning already co-locates each store's
-    rows in one partition — the engine adds NO exchange: the only
-    stages are scan -> Arrow kernel -> result. With
-    ``members_from_subjects=True`` the member seeds are derived inside
-    the kernel (distinct IRI subjects per store), so even the seed
-    ``distinct()`` shuffle disappears.
-
-    Skew note: the giant-store guard lives at ingest
-    (``materialize_store`` callers route oversized stores to the global
-    engine); by the time data is bucketed the skew decision has been
-    made.
-
-    ``columns``: subset of the result columns to emit — projection
-    pushdown through the Arrow boundary (a caller's ``.select`` after
-    ``mapInPandas`` prunes AFTER the Python->JVM transfer; this prunes
-    before it). When the projection skips ``object_lang``/
-    ``object_datatype`` the caller may also drop them from the input
-    scan — the kernel never reads them for traversal."""
-    vec_plan = compile_single_hop_links(
-        shapes_graph, shape, cbd_default_graph) if vectorize else None
-    cols = list(columns) if columns is not None else OUT_COLS
-    runner = _make_runner(
-        vec_plan, shapes_graph, shape,
-        tuple((g.kind, g.value) for g in graphs_to_ignore),
-        bulk, cbd_default_graph, store_col, members_from_subjects, cols,
-        store_distinct=store_distinct,
-    )
-    return store.mapInArrow(runner, _projected_schema(cols))
-
-
-def _store_files(path: str) -> List[str]:
-    """All bucket data files of a ``materialize_store`` table."""
-    import os
-
-    files: List[str] = []
-    for root, _dirs, fns in os.walk(path):
-        for fn in fns:
-            if fn.endswith(".parquet"):
-                files.append(os.path.join(root, fn))
-    return sorted(files)
-
-
-def _file_manifest(spark: SparkSession, files: List[str]) -> DataFrame:
-    """One bucket file per task. Each ``materialize_store`` file is a
-    complete set of stores, so file granularity preserves the kernel's
-    store-completeness contract with no conf games (``read_store``'s
-    maxPartitionBytes clone becomes unnecessary on this path).
+def _file_manifest(spark: SparkSession, src_dirs: Sequence[str]) -> DataFrame:
+    """One bucket file per task, over every parquet file under
+    ``src_dirs``. Each ``materialize_store`` file is a complete set of
+    stores, so file granularity preserves the kernel's
+    store-completeness contract.
 
     Built as a parallelized RDD with one path per slice — no Exchange
     anywhere in the plan (a ``repartition`` would insert a RoundRobin
     exchange, harmless over 256 strings but breaking the engine's
     zero-Exchange plan contract)."""
+    import os
+
+    files = sorted(
+        os.path.join(root, fn)
+        for d in src_dirs
+        for root, _dirs, fns in os.walk(d)
+        for fn in fns if fn.endswith(".parquet")
+    )
     rdd = spark.sparkContext.parallelize(
         [(p,) for p in files], max(1, len(files)))
     return spark.createDataFrame(rdd, "path string")
 
 
-def _store_read_columns(
-    store_col: str, columns: Optional[Sequence[str]]
-) -> Optional[List[str]]:
-    """Column projection for the python-native parquet read — the
-    file-scan twin of the JVM path's ``.drop('object_lang',
-    'object_datatype')`` pushdown: the kernel never traverses literal
-    lang/datatype, so when the caller's output projection omits them the
-    reader skips their column chunks entirely."""
-    if columns is None or {"object_lang", "object_datatype"} & set(columns):
-        return None
-    return [store_col, "subject", "subject_kind", "predicate",
-            "object_value", "object_kind", "graph", "graph_kind"]
+def _per_file(runner, store_col: str, columns: Optional[Sequence[str]]):
+    """Wrap a kernel runner for a file manifest: for each bucket path
+    in the task's batches, read the file with pyarrow inside the Python
+    worker and yield ``(path, kernel output batches)``.
+
+    The read is projected: the kernel never traverses literal
+    lang/datatype, so when the caller's output projection omits them
+    the reader skips their column chunks entirely."""
+    read_cols = None
+    if columns is not None and not (
+            {"object_lang", "object_datatype"} & set(columns)):
+        read_cols = [store_col, "subject", "subject_kind", "predicate",
+                     "object_value", "object_kind", "graph", "graph_kind"]
+
+    def each_file(batches):
+        import pyarrow.parquet as pq
+
+        for b in batches:
+            for p in b.column("path").to_pylist():
+                yield p, runner(
+                    pq.read_table(p, columns=read_cols).to_batches())
+
+    return each_file
 
 
 def local_bulk_extract_files(
@@ -1763,10 +1686,13 @@ def local_bulk_extract_files(
     exclude_stores: Sequence[str] = (),
     store_distinct: bool = False,
 ) -> DataFrame:
-    """Zero-shuffle extraction with a PYTHON-NATIVE scan: the job's rows
-    are bucket FILE PATHS; each task opens its complete bucket parquet
-    file with pyarrow inside the Python worker and runs the kernel on
-    the mmapped Arrow buffers directly.
+    """Zero-shuffle extraction over a ``materialize_store`` table with
+    a PYTHON-NATIVE scan: the job's rows are bucket FILE PATHS; each
+    task opens its complete bucket parquet file with pyarrow inside the
+    Python worker and runs the kernel on the mmapped Arrow buffers
+    directly. With ``members_from_subjects=True`` the member seeds are
+    derived inside the kernel (distinct IRI subjects per store), so
+    even the seed ``distinct()`` shuffle disappears.
 
     Motivation (measured, BENCH_LAYERS.md): the extraction kernel's
     numpy work scales ~0.97 as independent processes, but routing the
@@ -1780,33 +1706,28 @@ def local_bulk_extract_files(
     ``spark.dataSource``), expressed with ``mapInArrow`` so the plan
     stays a plain DataFrame.
 
+    ``columns``: subset of the result columns to emit — projection
+    pushdown through the Arrow boundary (a caller's ``.select`` after
+    ``mapInArrow`` prunes AFTER the Python->JVM transfer; this prunes
+    before it, and also prunes the input read, see ``_per_file``).
+
     At 100 TB the pattern holds: the manifest is the Iceberg scan-file
     list (planned driver-side, tiny), tasks read data files via the
     table FileIO, and no executor JVM materializes quad bytes.
-    Semantics are identical to ``local_bulk_extract_prebucketed``
-    (parity-tested); only the scan's physical path differs."""
-    vec_plan = compile_single_hop_links(
-        shapes_graph, shape, cbd_default_graph) if vectorize else None
-    cols = list(columns) if columns is not None else OUT_COLS
-    runner = _make_runner(
-        vec_plan, shapes_graph, shape,
-        tuple((g.kind, g.value) for g in graphs_to_ignore),
-        bulk, cbd_default_graph, store_col, members_from_subjects, cols,
-        exclude_stores=frozenset(exclude_stores),
-        store_distinct=store_distinct,
+    Semantics are identical to ``local_bulk_extract`` (parity-tested);
+    only the physical path differs."""
+    runner, cols = _make_runner(
+        shapes_graph, shape, store_col, bulk, cbd_default_graph,
+        graphs_to_ignore, vectorize, members_from_subjects, columns,
+        exclude_stores, store_distinct,
     )
-
-    read_cols = _store_read_columns(store_col, columns)
+    each_file = _per_file(runner, store_col, columns)
 
     def file_runner(batches) -> "Iterable":
-        import pyarrow.parquet as pq
+        for _p, out in each_file(batches):
+            yield from out
 
-        for b in batches:
-            for p in b.column("path").to_pylist():
-                yield from runner(
-                    pq.read_table(p, columns=read_cols).to_batches())
-
-    paths = _file_manifest(spark, _store_files(store_path))
+    paths = _file_manifest(spark, [store_path])
     return paths.mapInArrow(file_runner, _projected_schema(cols))
 
 
@@ -1848,18 +1769,12 @@ def extract_store_files_to_store(
     import os
 
     os.makedirs(out_path, exist_ok=True)
-    vec_plan = compile_single_hop_links(
-        shapes_graph, shape, cbd_default_graph) if vectorize else None
-    cols = list(columns) if columns is not None else OUT_COLS
-    runner = _make_runner(
-        vec_plan, shapes_graph, shape,
-        tuple((g.kind, g.value) for g in graphs_to_ignore),
-        bulk, cbd_default_graph, store_col, members_from_subjects, cols,
-        exclude_stores=frozenset(exclude_stores),
-        store_distinct=store_distinct,
+    runner, _cols = _make_runner(
+        shapes_graph, shape, store_col, bulk, cbd_default_graph,
+        graphs_to_ignore, vectorize, members_from_subjects, columns,
+        exclude_stores, store_distinct,
     )
-
-    read_cols = _store_read_columns(store_col, columns)
+    each_file = _per_file(runner, store_col, columns)
     # Accept one data dir or several (a snapshot that inherits parent
     # data dirs, sinks/materialize append model). Result names flatten
     # the path relative to the dirs' common root, so files from
@@ -1874,40 +1789,34 @@ def extract_store_files_to_store(
         import pyarrow as pa
         import pyarrow.parquet as pq
 
-        for b in batches:
-            for p in b.column("path").to_pylist():
-                out_batches = list(runner(
-                    pq.read_table(p, columns=read_cols).to_batches()))
-                dest = None
-                rows = 0
-                if out_batches:
-                    tbl = pa.Table.from_batches(out_batches)
-                    rows = tbl.num_rows
-                    # deterministic per-SOURCE-FILE name (retry lands the
-                    # same name, a second source file never collides):
-                    # Spark reuses part-NNNNN basenames across hive
-                    # partition dirs (bucket=15/part-00029 and
-                    # bucket=19/part-00029 coexist), so flatten the
-                    # path relative to the store root into the name.
-                    rel = os.path.relpath(os.path.abspath(p), store_root)
-                    dest = os.path.join(
-                        out_path, rel.replace(os.sep, "--"))
-                    tmp = dest + "." + uuid.uuid4().hex + ".tmp"
-                    pq.write_table(tbl, tmp)
-                    os.replace(tmp, dest)
-                yield pa.RecordBatch.from_pydict(
-                    {"src": [p], "file": [dest], "rows": [rows]},
-                    schema=pa.schema([
-                        pa.field("src", pa.string()),
-                        pa.field("file", pa.string()),
-                        pa.field("rows", pa.int64()),
-                    ]),
-                )
+        for p, out in each_file(batches):
+            out_batches = list(out)
+            dest = None
+            rows = 0
+            if out_batches:
+                tbl = pa.Table.from_batches(out_batches)
+                rows = tbl.num_rows
+                # deterministic per-SOURCE-FILE name (retry lands the
+                # same name, a second source file never collides):
+                # Spark reuses part-NNNNN basenames across hive
+                # partition dirs (bucket=15/part-00029 and
+                # bucket=19/part-00029 coexist), so flatten the
+                # path relative to the store root into the name.
+                rel = os.path.relpath(os.path.abspath(p), store_root)
+                dest = os.path.join(out_path, rel.replace(os.sep, "--"))
+                tmp = dest + "." + uuid.uuid4().hex + ".tmp"
+                pq.write_table(tbl, tmp)
+                os.replace(tmp, dest)
+            yield pa.RecordBatch.from_pydict(
+                {"src": [p], "file": [dest], "rows": [rows]},
+                schema=pa.schema([
+                    pa.field("src", pa.string()),
+                    pa.field("file", pa.string()),
+                    pa.field("rows", pa.int64()),
+                ]),
+            )
 
-    files: List[str] = []
-    for d in src_dirs:
-        files.extend(_store_files(d))
-    paths = _file_manifest(spark, files)
+    paths = _file_manifest(spark, src_dirs)
     return paths.mapInArrow(sink_runner, "src string, file string, rows long")
 
 
@@ -1922,105 +1831,45 @@ def local_bulk_extract(
     n_buckets: Optional[int] = None,
     graphs_to_ignore: Sequence[Term] = (),
     vectorize: bool = True,
-    giant_store_threshold: Optional[int] = None,
     columns: Optional[Sequence[str]] = None,
     store_distinct: bool = False,
 ) -> DataFrame:
     """Distributed wrapper: one shuffle by ``store_col``, then per-store
-    extraction in applyInPandas (cogrouped with the member seeds).
-    ``columns``: projection pushdown into the kernel output schema (see
-    ``local_bulk_extract_prebucketed``).
+    extraction in one mapInArrow kernel per partition. ``columns``:
+    projection pushdown into the kernel output schema (see
+    ``local_bulk_extract_files``).
 
     ``triples``: quad columns + ``store_col``; ``members``: ``entity``
     (string), optional ``entity_kind``, + ``store_col``.
 
-    Stores are hashed into ``n_buckets`` coarse groups (default 4x the
-    default parallelism) so the per-group pandas overhead amortizes over
-    thousands of stores per task; store isolation is preserved by
-    grouping on ``store_col`` again inside the task.
+    Stores are hashed into ``n_buckets`` coarse groups (default 2x the
+    default parallelism, at least 64) so the per-group pandas overhead
+    amortizes over thousands of stores per task; store isolation is
+    preserved by grouping on ``store_col`` again inside the task.
 
-    ``giant_store_threshold``: when set, one counting pass finds stores
-    with more quads than the threshold and routes them through the
-    global fixpoint engine (one run per giant store, preserving store
-    isolation) instead of landing the whole store in a single
-    applyInPandas task — the skew/OOM guard for web-scale corpora where
-    one page can be 10^6 quads. Costs one extra aggregate scan, so the
-    raw operator leaves it off; KGConstructionPipeline turns it on."""
-    if giant_store_threshold is not None:
-        giants = [
-            r[0]
-            for r in triples.groupBy(store_col)
-            .agg(F.count(F.lit(1)).alias("_n"))
-            .filter(F.col("_n") > giant_store_threshold)
-            .select(store_col)
-            .collect()
-        ]
-        if giants:
-            from extract_cbd_shape_spark.model import QUAD_COLS
-            from extract_cbd_shape_spark.operators.extract import (
-                BulkCBDShapeExtractor,
-            )
-
-            parts = [
-                local_bulk_extract(
-                    triples.filter(~F.col(store_col).isin(giants)),
-                    members.filter(~F.col(store_col).isin(giants)),
-                    shapes_graph, shape, store_col, bulk,
-                    cbd_default_graph, n_buckets, graphs_to_ignore,
-                    vectorize, None, columns, store_distinct,
-                )
-            ]
-            ex = BulkCBDShapeExtractor(
-                triples.sparkSession, shapes_graph=shapes_graph,
-                cbd_default_graph=cbd_default_graph,
-            )
-            # One global-engine run per giant store: its frontier joins
-            # spread the store over every executor, and per-store runs
-            # preserve store isolation (no cross-store subject walks).
-            for g in giants:
-                res, _ = ex.extract(
-                    triples.filter(F.col(store_col) == g).drop(store_col),
-                    members.filter(F.col(store_col) == g).select(
-                        "entity", "entity_kind"
-                    ),
-                    shape=shape,
-                    graphs_to_ignore=graphs_to_ignore,
-                    bulk=bulk,
-                )
-                giant_part = res.select("entity", *QUAD_COLS)
-                if columns is not None:
-                    giant_part = giant_part.select(*columns)
-                parts.append(giant_part)
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionByName(p)
-            return out
-
+    Every store lands whole in one task. A store too big for one task
+    (a giant page) belongs on the global fixpoint engine
+    (``BulkCBDShapeExtractor``), run once per giant store — the
+    pipeline routes its ingest-detected giants that way."""
     spark = triples.sparkSession
     # Partition count decoupled from session parallelism: enough
     # partitions that store-hash collisions balance (law of large
     # numbers), scaled up with the cluster.
     p = n_buckets or max(64, spark.sparkContext.defaultParallelism * 2)
-    # Vectorized fast path: single-hop forward-predicate shape DAGs run
-    # as columnar merges over the whole bucket (no per-member Python).
-    vec_plan = compile_single_hop_links(
-        shapes_graph, shape, cbd_default_graph) if vectorize else None
 
     # SINGLE-shuffle physical plan: member seeds ride along as marker
     # rows in the same stream, the union is hash-repartitioned by store
     # (NO sort — unlike groupBy/cogroup applyInPandas, which sorts every
-    # partition by key), and mapInPandas consumes whole partitions.
+    # partition by key), and mapInArrow consumes whole partitions.
     # Store isolation is enforced inside the kernel by the store column,
     # so partition = a coarse bucket of many stores. (Corpora that are
     # bucketed by store at ingest skip even this one shuffle —
-    # materialize_store / local_bulk_extract_prebucketed.)
+    # materialize_store / local_bulk_extract_files.)
     combined = _marker_stream(triples, members, store_col).repartition(
         p, F.col(store_col))
-    cols = list(columns) if columns is not None else OUT_COLS
-    runner = _make_runner(
-        vec_plan, shapes_graph, shape,
-        tuple((g.kind, g.value) for g in graphs_to_ignore),
-        bulk, cbd_default_graph, store_col, False, cols,
+    runner, cols = _make_runner(
+        shapes_graph, shape, store_col, bulk, cbd_default_graph,
+        graphs_to_ignore, vectorize, False, columns,
         store_distinct=store_distinct,
     )
     return combined.mapInArrow(runner, _projected_schema(cols))

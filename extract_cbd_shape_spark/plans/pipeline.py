@@ -21,12 +21,12 @@ from typing import Dict, Optional
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from extract_cbd_shape_spark.model import BLANK, IRI, LITERAL, Term
+from extract_cbd_shape_spark.model import BLANK, IRI, QUAD_COLS, Term
 from extract_cbd_shape_spark.operators.closure import (
     connected_components,
     connected_components_driver,
 )
-from extract_cbd_shape_spark.operators.extract import BulkCBDShapeExtractor, Member
+from extract_cbd_shape_spark.operators.extract import BulkCBDShapeExtractor
 from extract_cbd_shape_spark.operators.linking import link_mentions
 from extract_cbd_shape_spark.shapes.compiler import ShapesGraph
 from extract_cbd_shape_spark.sinks.materialize import (
@@ -63,7 +63,6 @@ class KGConstructionPipeline:
         shapes_graph: Optional[ShapesGraph] = None,
         shape: Optional[Term] = None,
         dict_size: int = 20,
-        local_extraction: bool = True,
         construct_rules: Optional[list] = None,
     ):
         self.spark = spark
@@ -71,7 +70,6 @@ class KGConstructionPipeline:
         self.shapes_graph = shapes_graph
         self.shape = shape
         self.dict_size = dict_size
-        self.local_extraction = local_extraction
         # Optional CONSTRUCT enrichment rules (stage 4b): each rule is a
         # dict of `operators.bgp.bgp_construct` keyword arguments
         # (patterns, template, optional, filters, ...) evaluated over
@@ -108,30 +106,24 @@ class KGConstructionPipeline:
         data dirs: worker-side pyarrow read -> CSR kernel -> worker-side
         parquet write into the next entity_triples snapshot
         (begin/commit — a crash before commit leaves no manifest and
-        the retry overwrites via deterministic names). Giant pages
-        (ingest-time manifest ``giant_stores``) are excluded in the
-        kernel and served by the global fixpoint engine, landing in the
-        same snapshot under deterministic ``giant-*`` names.
+        the retry overwrites via deterministic names). Member seeds are
+        the distinct IRI subjects of each page, derived inside the
+        kernel; blank-node subjects (page-scoped labels) are reached
+        through CBD blank closure, not seeded. Giant pages (ingest-time
+        manifest ``giant_stores``) are excluded in the kernel and
+        served by the global fixpoint engine, landing in the same
+        snapshot under deterministic ``giant-*`` names.
 
         ``inherit=True`` (incremental runs): ``src_dirs`` is only the
         DELTA raw_triples dir and the committed snapshot lists the
         parent entity_triples data dirs by reference alongside the new
         result files (sinks/materialize append model)."""
-        import pyarrow.parquet as pq
-
         from extract_cbd_shape_spark.operators.local_extract import (
             extract_store_files_to_store,
-            local_bulk_extract,
         )
 
         spark = self.spark
         src = list(src_dirs)
-        if giants is None:  # pre-threshold snapshot layout: one scan
-            giants = [
-                r[0] for r in read_data_dirs(spark, src).groupBy("page_url")
-                .agg(F.count(F.lit(1)).alias("_n"))
-                .filter(F.col("_n") > GIANT_PAGE_QUADS).collect()
-            ]
         snap_dir = begin_snapshot(self._table("entity_triples"))
         data_dir = os.path.join(snap_dir, "data")
         mrows = extract_store_files_to_store(
@@ -149,39 +141,9 @@ class KGConstructionPipeline:
             if fn.startswith("giant-"):
                 os.remove(os.path.join(data_dir, fn))
         if giants:
-            store = read_data_dirs(spark, src).drop("bucket").withColumnRenamed(
-                "page_url", "store_key")
-            gq = store.filter(F.col("store_key").isin(giants))
-            subjects = gq.filter(F.col("subject_kind") == IRI).select(
-                "store_key", F.col("subject").alias("entity"),
-                F.col("subject_kind").alias("entity_kind")).distinct()
-            gres = local_bulk_extract(
-                gq, subjects, shapes_graph=self.shapes_graph,
-                shape=self.shape,
-                giant_store_threshold=GIANT_PAGE_QUADS - 1,
-            ).select(
-                "entity", "subject", "subject_kind", "predicate",
-                "object_value", "object_kind", "object_lang",
-                "object_datatype", "graph", "graph_kind",
-            )
-            import tempfile
-
-            tmp = tempfile.mkdtemp(prefix="giants_", dir=self.warehouse)
-            try:
-                gres.write.mode("overwrite").parquet(tmp)
-                for i, fn in enumerate(sorted(
-                        f for f in os.listdir(tmp)
-                        if f.endswith(".parquet"))):
-                    dest = os.path.join(data_dir, f"giant-{i:04d}.parquet")
-                    os.replace(os.path.join(tmp, fn), dest)
-                    n = pq.read_metadata(dest).num_rows
-                    rows += n
-                    partitions.append(
-                        {"src": "giant_stores", "file": dest, "rows": n})
-            finally:
-                import shutil
-
-                shutil.rmtree(tmp, ignore_errors=True)
+            for part in self._extract_giants(src, giants, data_dir):
+                rows += part["rows"]
+                partitions.append(part)
         extra = {"giant_stores": giants}
         if epoch is not None:
             extra["epoch"] = epoch
@@ -199,6 +161,51 @@ class KGConstructionPipeline:
             snap_dir, "extract_entities", rows, partitions, **extra,
         )
 
+    def _extract_giants(self, src, giants, data_dir) -> list:
+        """Skew guard: extract each giant page with the global fixpoint
+        engine — one run per page, so its frontier joins spread the page
+        over every executor while store isolation holds (no cross-page
+        subject walks) — and land the union as ``giant-NNNN.parquet``
+        files in ``data_dir``. Returns their lineage partitions. The
+        engine's cached store copies are released once the write is
+        done, so a long-lived driver (streaming micro-batches) does not
+        accumulate one cache entry per giant page."""
+        import shutil
+        import tempfile
+
+        import pyarrow.parquet as pq
+
+        spark = self.spark
+        store = read_data_dirs(spark, src)
+        ex = BulkCBDShapeExtractor(spark, shapes_graph=self.shapes_graph)
+        tmp = tempfile.mkdtemp(prefix="giants_", dir=self.warehouse)
+        try:
+            gres = None
+            for g in giants:
+                page = store.filter(F.col("page_url") == g)
+                members = page.filter(F.col("subject_kind") == IRI).select(
+                    F.col("subject").alias("entity"),
+                    F.col("subject_kind").alias("entity_kind"),
+                ).distinct()
+                res, _flags = ex.extract(
+                    page.drop("page_url", "bucket"), members,
+                    shape=self.shape, bulk=True,
+                )
+                res = res.select("entity", *QUAD_COLS)
+                gres = res if gres is None else gres.unionByName(res)
+            gres.write.mode("overwrite").parquet(tmp)
+            parts = []
+            for i, fn in enumerate(sorted(
+                    f for f in os.listdir(tmp) if f.endswith(".parquet"))):
+                dest = os.path.join(data_dir, f"giant-{i:04d}.parquet")
+                os.replace(os.path.join(tmp, fn), dest)
+                parts.append({"src": "giant_stores", "file": dest,
+                              "rows": pq.read_metadata(dest).num_rows})
+            return parts
+        finally:
+            ex.release()
+            shutil.rmtree(tmp, ignore_errors=True)
+
     @staticmethod
     def _parse_pages(pages: DataFrame) -> DataFrame:
         return extract_page_triples(pages).select(
@@ -214,106 +221,52 @@ class KGConstructionPipeline:
             F.col("url").alias("page_url"),
         )
 
+    def _ingest(self, pages: DataFrame, append: bool = False,
+                epoch: Optional[int] = None) -> dict:
+        """Stage 1 — pages -> raw triples (Arrow-vectorized parse),
+        committed as a raw_triples snapshot (``append``: a delta
+        snapshot inheriting the parent's data files).
+
+        Store-complete by page: each page's triples land whole in one
+        bucket file, so stage 2 extracts with ZERO shuffles (the one
+        repartition here is the ingest-time bucketing a 100 TB corpus
+        pays once, not per extraction). Skew detection is paid here
+        too: pages above GIANT_PAGE_QUADS are listed in the manifest
+        and every later extraction routes them without re-scanning the
+        corpus."""
+        return materialize_table(
+            self._parse_pages(pages), self._table("raw_triples"),
+            "extract_pages", bucket_by="page_url", store_complete=True,
+            giant_threshold=GIANT_PAGE_QUADS, append=append,
+            manifest_extra={"epoch": epoch} if epoch is not None else None,
+        )
+
     def run(self, pages: DataFrame, resume: bool = True) -> Dict[str, dict]:
-        spark = self.spark
         manifests: Dict[str, dict] = {}
         self.stage_seconds = {}
 
-        # Stage 1 — pages -> raw triples (Arrow-vectorized parse).
         if not (resume and self._stage_done("raw_triples", "extract_pages")):
             with self._timed("parse"):
-                raw = self._parse_pages(pages)
-                # Store-complete by page: each page's triples land whole
-                # in one bucket file, so stage 2 extracts with ZERO
-                # shuffles (the one repartition here is the ingest-time
-                # bucketing a 100 TB corpus pays once, not per
-                # extraction).
-                manifests["raw_triples"] = materialize_table(
-                    raw, self._table("raw_triples"), "extract_pages",
-                    bucket_by="page_url", store_complete=True,
-                    # skew detection is paid once at ingest: pages above
-                    # the threshold are listed in the manifest and every
-                    # later extraction routes them without re-scanning
-                    # the corpus
-                    giant_threshold=GIANT_PAGE_QUADS,
-                )
-        raw = read_latest_snapshot(spark, self._table("raw_triples"))
+                manifests["raw_triples"] = self._ingest(pages)
 
-        # Stage 2 — per-entity CBD/shape extraction. Page triples are
-        # store-partitioned by construction (each page's subjects live in
-        # that page), so the store-local fast path applies: one shuffle
-        # by page, per-page extraction, no driver fixpoint rounds.
-        # Cross-page graphs would set local_extraction=False and take the
-        # global bulk engine instead.
-        _t0 = time.time()
+        # Stage 2 — per-entity CBD/shape extraction, sink-fused over the
+        # store-complete raw_triples snapshot: each task reads its bucket
+        # parquet with pyarrow in the worker, extracts, and writes its
+        # result file into the next entity_triples snapshot — no quad
+        # bytes through the JVM, no exchange (BENCH_LAYERS.md). Giant
+        # pages listed at ingest route to the global engine.
         if not (resume and self._stage_done("entity_triples", "extract_entities")):
-            # Seeds stay distributed: a DataFrame of distinct subjects
-            # (collecting 10^12-scale subject lists to the driver is the
-            # one thing this pipeline must never do).
-            ex = None
-            results = None
-            if self.local_extraction:
-                from extract_cbd_shape_spark.operators.local_extract import (
-                    local_bulk_extract,
-                )
-
+            with self._timed("extract"):
                 m = latest_manifest(self._table("raw_triples"))
-                if m and m.get("store_complete") and m.get("bucket_by") == "page_url":
-                    # Sink-fused zero-shuffle path: the snapshot is
-                    # store-complete per bucket file; each task reads
-                    # its bucket parquet with pyarrow in the worker,
-                    # extracts (member seeds = distinct IRI subjects
-                    # per page, derived inside the kernel), and writes
-                    # its result file into the next entity_triples
-                    # snapshot — no quad bytes through the JVM, no
-                    # exchange (BENCH_LAYERS.md). Skew guard: giant
-                    # pages were identified at ingest (manifest
-                    # giant_stores) and route to the global engine.
-                    manifests["entity_triples"] = self._extract_entities_sink(
-                        latest_snapshot_paths(self._table("raw_triples")),
-                        m.get("giant_stores"),
-                    )
-                else:
-                    # resumed from a pre-store-complete snapshot layout
-                    t2 = raw.drop("bucket").withColumnRenamed(
-                        "page_url", "store_key")
-                    # IRI subjects only: blank-node subjects (page-scoped
-                    # labels) are reached through CBD blank closure, not
-                    # seeded as members.
-                    subjects = t2.filter(F.col("subject_kind") == IRI).select(
-                        "store_key", F.col("subject").alias("entity")
-                    ).distinct()
-                    results = local_bulk_extract(
-                        t2, subjects, shapes_graph=self.shapes_graph,
-                        shape=self.shape,
-                        # skew guard: a pathological page with more quads
-                        # than this routes through the global engine
-                        # instead of one straggler task
-                        giant_store_threshold=GIANT_PAGE_QUADS,
-                    )
-            else:
-                subjects = raw.filter(F.col("subject_kind") == IRI).select(
-                    F.col("subject").alias("entity")).distinct()
-                ex = BulkCBDShapeExtractor(spark, shapes_graph=self.shapes_graph)
-                results, flags = ex.extract(
-                    raw.drop("page_url", "bucket"), subjects,
-                    shape=self.shape, bulk=True,
+                if not (m.get("store_complete")
+                        and m.get("bucket_by") == "page_url"):
+                    raise ValueError(
+                        "raw_triples snapshot is not store-complete by "
+                        "page_url; rebuild it with run(resume=False)")
+                manifests["entity_triples"] = self._extract_entities_sink(
+                    latest_snapshot_paths(self._table("raw_triples")),
+                    m.get("giant_stores") or [],
                 )
-            if results is not None:
-                entity_triples = results.select(
-                    "entity", "subject", "subject_kind", "predicate",
-                    "object_value", "object_kind", "object_lang",
-                    "object_datatype", "graph", "graph_kind",
-                )
-                manifests["entity_triples"] = materialize_table(
-                    entity_triples, self._table("entity_triples"),
-                    "extract_entities",
-                )
-            if ex is not None:
-                # stage output is materialized — drop the run's cached
-                # store copies before the next stage claims memory
-                ex.release()
-            self.stage_seconds["extract"] = round(time.time() - _t0, 3)
         self._graph_stages(manifests, resume)
 
         for name in ("raw_triples", "entity_triples", "links", "entities", "triples"):
@@ -356,14 +309,7 @@ class KGConstructionPipeline:
         raw_tbl = self._table("raw_triples")
         m = latest_manifest(raw_tbl)
         if not (epoch is not None and m and m.get("epoch") == epoch):
-            m = materialize_table(
-                self._parse_pages(new_pages), raw_tbl,
-                "extract_pages", bucket_by="page_url", store_complete=True,
-                giant_threshold=GIANT_PAGE_QUADS, append=True,
-                manifest_extra=(
-                    {"epoch": epoch} if epoch is not None else None
-                ),
-            )
+            m = self._ingest(new_pages, append=True, epoch=epoch)
         manifests["raw_triples"] = m
         delta_dir = os.path.join(raw_tbl, _data_dirs(m)[-1])
         me = latest_manifest(self._table("entity_triples"))
@@ -372,7 +318,7 @@ class KGConstructionPipeline:
         else:
             manifests["entity_triples"] = self._extract_entities_sink(
                 [delta_dir],
-                m.get("delta_giant_stores", m.get("giant_stores")),
+                m["delta_giant_stores"],
                 inherit=True, epoch=epoch,
             )
         self._graph_stages(manifests, resume=False)

@@ -59,12 +59,14 @@ def materialize_table(
     manifest_extra: Optional[dict] = None,
 ) -> dict:
     """Write df as the next snapshot of the table at ``path``.
-    Returns the manifest dict.
+    Returns the manifest dict. Rows are written as given — no
+    deduplication — so a snapshot repeats whatever rows ``df`` repeats.
 
     ``store_complete=True`` additionally repartitions by the bucket
     value before writing, so each bucket lands as ONE file — a reader
-    that never splits files (``operators.local_extract.read_store``)
-    then sees every ``bucket_by`` group whole inside one task, which is
+    that hands each task whole files
+    (``operators.local_extract.extract_store_files_to_store``) then
+    sees every ``bucket_by`` group whole inside one task, which is
     the precondition for zero-shuffle store-local extraction. This is
     the parquet stand-in for Iceberg's ``partitionedBy(bucket(N, col))``
     write distribution.
@@ -249,17 +251,6 @@ def read_data_dirs(spark: SparkSession, dirs: List[str]) -> DataFrame:
     for d in dirs[1:]:
         df = df.unionByName(spark.read.parquet(d))
     return df
-
-
-def latest_snapshot_path(path: str) -> Optional[str]:
-    """Single data dir of the latest snapshot — only valid for tables
-    never written with ``append=True`` (asserts otherwise; append-aware
-    readers use ``latest_snapshot_paths``)."""
-    dirs = latest_snapshot_paths(path)
-    if not dirs:
-        return None
-    assert len(dirs) == 1, f"appended table {path}: use latest_snapshot_paths"
-    return dirs[0]
 
 
 def latest_snapshot_paths(path: str) -> List[str]:

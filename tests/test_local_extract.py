@@ -622,43 +622,15 @@ ex:Z ex:v "only reached when X is claimed by CShape" .
     assert len(interp) == 5
 
 
-def test_giant_store_fallback_parity(spark):
-    """A store above giant_store_threshold routes through the global
-    engine; results must equal the pure store-local run."""
-    from extract_cbd_shape_spark.operators.kgtriples import (
-        KBO_SHAPE_IRI, KBO_SHAPE_TTL, kbo_members)
-
-    triples, members = kbo_members(spark, "/root/testdata/sf0.001")
-    shapes = ShapesGraph.from_quads(parse_trig(KBO_SHAPE_TTL))
-    shape = Term(IRI, KBO_SHAPE_IRI)
-    # two stores: one giant (every order with key < 1000), one normal
-    giant_key = F.when(F.col("subject").rlike("^[ma]:[0-9]{1,3}$"),
-                       F.lit("giant")).otherwise(F.split(F.col("subject"), ":")[1])
-    t2 = triples.withColumn("store_key", giant_key)
-    m2 = members.withColumn(
-        "store_key",
-        F.when(F.col("entity").rlike("^m:[0-9]{1,3}$"), F.lit("giant"))
-        .otherwise(F.split(F.col("entity"), ":")[1]),
-    )
-    kw = dict(shapes_graph=shapes, shape=shape, n_buckets=8)
-    plain = local_bulk_extract(t2, m2, **kw)
-    routed = local_bulk_extract(t2, m2, giant_store_threshold=500, **kw)
-    pset = {tuple(r) for r in
-            plain.select("entity", "subject", "predicate", "object_value").collect()}
-    rset = {tuple(r) for r in
-            routed.select("entity", "subject", "predicate", "object_value").collect()}
-    assert pset == rset
-    assert len(pset) > 0
-
-
 def test_prebucketed_store_parity(spark, tmp_path):
-    """materialize_store + zero-shuffle extraction must equal the
-    shuffling engine, both with marker members and with members derived
-    from IRI subjects; the physical plan must contain no Exchange."""
+    """materialize_store + zero-shuffle file-scan extraction must equal
+    the shuffling engine, both with marker members and with members
+    derived from IRI subjects; the physical plan must contain no
+    Exchange."""
     from extract_cbd_shape_spark.operators.kgtriples import (
         KBO_SHAPE_IRI, KBO_SHAPE_TTL, kbo_members)
     from extract_cbd_shape_spark.operators.local_extract import (
-        local_bulk_extract_prebucketed, materialize_store, read_store)
+        local_bulk_extract_files, materialize_store)
 
     triples, members = kbo_members(spark, "/root/testdata/sf0.001")
     shapes = ShapesGraph.from_quads(parse_trig(KBO_SHAPE_TTL))
@@ -671,19 +643,18 @@ def test_prebucketed_store_parity(spark, tmp_path):
             base.select("entity", "subject", "predicate", "object_value").collect()}
 
     cols = ["entity", "subject", "predicate", "object_value"]
-    st = read_store(spark, materialize_store(
-        t2, m2, str(tmp_path / "store"), n_buckets=8))
-    pre = local_bulk_extract_prebucketed(st, shapes_graph=shapes, shape=shape)
+    st = materialize_store(t2, m2, str(tmp_path / "store"), n_buckets=8)
+    pre = local_bulk_extract_files(spark, st, shapes_graph=shapes, shape=shape)
     assert "Exchange" not in pre._jdf.queryExecution().executedPlan().toString()
     pset = {tuple(r) for r in pre.select(*cols).collect()}
     assert pset == bset and len(pset) > 0
 
     # quads-only store; members derived per store from IRI subjects
     # (KBO subjects are exactly the member IRIs + address blanks)
-    st2 = read_store(spark, materialize_store(
-        t2, None, str(tmp_path / "store2"), n_buckets=8))
-    pre2 = local_bulk_extract_prebucketed(
-        st2, shapes_graph=shapes, shape=shape, members_from_subjects=True)
+    st2 = materialize_store(t2, None, str(tmp_path / "store2"), n_buckets=8)
+    pre2 = local_bulk_extract_files(
+        spark, st2, shapes_graph=shapes, shape=shape,
+        members_from_subjects=True)
     p2set = {tuple(r) for r in pre2.select(*cols).collect()}
     assert p2set == bset
 
@@ -767,29 +738,6 @@ def test_file_scan_and_sink_fused_parity(spark, tmp_path):
         assert {tuple(r) for r in landed.select(*cols).collect()} == bset
 
 
-def test_read_store_does_not_mutate_session_conf(spark, tmp_path):
-    """read_store's no-split guard must stay scoped to its own cloned
-    session — the caller's maxPartitionBytes is untouched (ADVICE r2)."""
-    from extract_cbd_shape_spark.operators.kgtriples import kbo_members
-    from extract_cbd_shape_spark.operators.local_extract import (
-        materialize_store, read_store)
-
-    key = "spark.sql.files.maxPartitionBytes"
-    spark.conf.set(key, "4096")  # below any real bucket file size
-    try:
-        t2, m2 = kbo_members(spark, "/root/testdata/sf0.001")
-        t2 = t2.withColumn("store_key", F.split(F.col("subject"), ":")[1])
-        st = read_store(spark, materialize_store(
-            t2, None, str(tmp_path / "store"), n_buckets=4))
-        assert st.count() > 0
-        assert spark.conf.get(key) == "4096"
-        # the scan itself must still be no-split: 4 bucket files -> at
-        # most 4 partitions even though each file exceeds 4096 bytes
-        assert st.rdd.getNumPartitions() <= 4
-    finally:
-        spark.conf.unset(key)
-
-
 def test_deep_nodelink_chain_no_recursion_error():
     """A nodeLink chain far deeper than CPython's recursion limit must
     extract completely (ADVICE r2: extract_recursively was recursive
@@ -852,11 +800,12 @@ def test_projected_columns_parity(spark, tmp_path):
     """columns= projection pushdown (kernel emits only the requested
     columns through Arrow) must equal the post-hoc .select, on the
     vectorized kernel, the per-member interpreter, and the zero-shuffle
-    pre-bucketed store with a pruned input scan."""
+    file scan of a pre-bucketed store, whose pyarrow read then skips
+    the lang/datatype columns."""
     from extract_cbd_shape_spark.operators.kgtriples import (
         KBO_SHAPE_IRI, KBO_SHAPE_TTL, kbo_members)
     from extract_cbd_shape_spark.operators.local_extract import (
-        local_bulk_extract_prebucketed, materialize_store, read_store)
+        local_bulk_extract_files, materialize_store)
 
     triples, members = kbo_members(spark, "/root/testdata/sf0.001")
     shapes = ShapesGraph.from_quads(parse_trig(KBO_SHAPE_TTL))
@@ -876,12 +825,13 @@ def test_projected_columns_parity(spark, tmp_path):
         assert [f.name for f in proj.schema.fields] == cols
         assert {tuple(r) for r in proj.collect()} == bset
 
-    st = read_store(spark, materialize_store(
-        t2, m2, str(tmp_path / "store"), n_buckets=8))
-    pre = local_bulk_extract_prebucketed(
-        st.drop("object_lang", "object_datatype"),
-        shapes_graph=shapes, shape=shape, columns=cols)
-    assert {tuple(r) for r in pre.collect()} == bset
+    st = materialize_store(t2, m2, str(tmp_path / "store"), n_buckets=8)
+    for vec in (True, False):
+        pre = local_bulk_extract_files(
+            spark, st, shapes_graph=shapes, shape=shape, vectorize=vec,
+            columns=cols)
+        assert [f.name for f in pre.schema.fields] == cols
+        assert {tuple(r) for r in pre.collect()} == bset
 
 
 def test_vec_cross_store_isolation_same_bucket(spark):

@@ -200,6 +200,35 @@ def test_pipeline_giant_page_routing_parity(spark, tmp_path, monkeypatch):
     assert giant["triples"]["rows"] == base["triples"]["rows"]
 
 
+def test_giant_routing_releases_engine_cache(spark, tmp_path, monkeypatch):
+    """Giant pages run on the global engine, whose persisted store
+    copies must be released once the giant results are written —
+    otherwise every giant page (and every streaming micro-batch) leaves
+    its cached copies in the session for the life of the driver."""
+    import extract_cbd_shape_spark.plans.pipeline as pipemod
+
+    pages = synth_pages(spark, SF).orderBy("url").limit(6)
+    spark.catalog.clearCache()
+    monkeypatch.setattr(pipemod, "GIANT_PAGE_QUADS", 2)
+    m = KGConstructionPipeline(spark, str(tmp_path / "wh")).run(
+        pages, resume=False)
+    assert m["entity_triples"]["giant_stores"], "pages must route giant"
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
+def test_resume_rejects_non_store_complete_raw_triples(spark, tmp_path):
+    """Stage 2 has one physical path, the sink-fused file scan, which
+    needs raw_triples bucketed store-complete by page_url. A snapshot
+    written any other way is rejected, not extracted some other way."""
+    wh = str(tmp_path / "wh")
+    pages = synth_pages(spark, SF).orderBy("url").limit(5)
+    pipe = KGConstructionPipeline(spark, wh)
+    materialize_table(pipe._parse_pages(pages),
+                      os.path.join(wh, "raw_triples"), "extract_pages")
+    with pytest.raises(ValueError, match="store-complete"):
+        pipe.run(pages, resume=True)
+
+
 def test_blank_label_scoping_across_pages(spark):
     """Two pages each yield a parser-local _:b0 author node; after the
     global union their labels must NOT merge: each document's CBD pulls

@@ -363,26 +363,6 @@ def test_store_partitioned_skips_repartition(spark):
 _CMP_COLS = ["entity", "subject", "predicate", "object_value"]
 
 
-def test_materialize_waves_modes_agree(spark):
-    """The two CBD wave-loop physical strategies (full-width wave
-    checkpoints vs narrow bookkeeping + lazy recompute) must produce
-    identical results — they differ only in what is materialized."""
-    from extract_cbd_shape_spark.operators.kgtriples import (
-        KBO_SHAPE_IRI, KBO_SHAPE_TTL, kbo_members)
-
-    triples, members = kbo_members(spark, "/root/testdata/sf0.001")
-    shapes = ShapesGraph.from_quads(parse_trig(KBO_SHAPE_TTL))
-    shape = Term(IRI, KBO_SHAPE_IRI)
-    cols = ["entity", "subject", "predicate", "object_value"]
-    sets = []
-    for mat in (True, False):
-        ex = BulkCBDShapeExtractor(
-            spark, shapes_graph=shapes, materialize_waves=mat)
-        res, _ = ex.extract(triples, members, shape=shape)
-        sets.append({tuple(r) for r in res.select(*cols).collect()})
-    assert sets[0] == sets[1] and len(sets[0]) > 0
-
-
 def test_members_distinct_contract_parity(spark):
     """members_distinct=True (value-derived deterministic ids, no seed
     checkpoint) must produce the same quads as the default path; and

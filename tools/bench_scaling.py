@@ -13,7 +13,8 @@ Jobs (sized so executor work dominates fixed driver overhead):
   engine, KBO corpus at the sf (150k members / 2.1M quads at sf0.1).
 * extract_local  — same extraction via the store-local engine over a
   PRE-BUCKETED store (materialize_store at ingest, untimed; the timed
-  job is the zero-shuffle scan -> Arrow kernel -> count).
+  job is the zero-shuffle worker-side bucket read -> Arrow kernel ->
+  count, local_bulk_extract_files).
 * pipeline       — end-to-end KG construction over a replicated pages
   corpus.
 * minhash        — MinHash-LSH near-dup dedup over a replicated,
@@ -46,11 +47,9 @@ sys.path.insert(0, REPO_PATH)
 job = sys.argv[1]; cpus = int(sys.argv[2]); sf_dir = sys.argv[3]
 replicate = int(sys.argv[4])
 kbo_rep = {"extract_global": replicate,
-           "extract_global_mat": replicate,
            "extract_global_ctrl": replicate,
            "sparkjoin": replicate,
            "extract_local": replicate,
-           "extract_files": replicate,
            "extract_sink": replicate,
            # interpreter kernel is ~8x the CPU per quad: quarter corpus
            # keeps the cell wall-clock comparable
@@ -70,7 +69,6 @@ from pyspark.sql import functions as F
 from extract_cbd_shape_spark.operators.kgtriples import (
     kbo_members, with_store_key, KBO_SHAPE_TTL, KBO_SHAPE_IRI)
 from extract_cbd_shape_spark.operators import BulkCBDShapeExtractor
-from extract_cbd_shape_spark.operators.local_extract import local_bulk_extract
 from extract_cbd_shape_spark.rdf import parse_trig
 from extract_cbd_shape_spark.shapes import ShapesGraph
 from extract_cbd_shape_spark.model import Term, IRI
@@ -98,17 +96,12 @@ def kbo_input(rep, with_store):
     m.write.mode("overwrite").parquet(work + "/m")
     return spark.read.parquet(work + "/t"), spark.read.parquet(work + "/m")
 
-if job in ("extract_global", "extract_global_mat"):
-    # default = lean waves (materialize_waves=False): wave joins keep
-    # only a narrow bookkeeping checkpoint and results recompute once
-    # in the final count. _mat measures the materializing variant
-    # (full-width wave checkpoints) as evidence of the cost tradeoff
-    # the knob exposes.
-    mat = job == "extract_global_mat"
+if job == "extract_global":
+    # lean waves: wave joins keep only a narrow bookkeeping checkpoint
+    # and results recompute once in the final count.
     wt, wm = kbo_members(spark, "/root/testdata/sf0.001")
     BulkCBDShapeExtractor(
-        spark, shapes_graph=shapes, materialize_waves=mat,
-        store_distinct=True).extract(
+        spark, shapes_graph=shapes, store_distinct=True).extract(
         wt, wm, shape=shape)[0].count()  # warm
     triples, members = kbo_input(kbo_rep, with_store=False)
     t0 = time.time()
@@ -117,64 +110,43 @@ if job in ("extract_global", "extract_global_mat"):
     # output path is shuffle-free — the production contract for
     # snapshots materialize_table writes.
     ex = BulkCBDShapeExtractor(
-        spark, shapes_graph=shapes, materialize_waves=mat,
-        store_distinct=True)
+        spark, shapes_graph=shapes, store_distinct=True)
     n = ex.extract(triples, members, shape=shape)[0].count()
     out = dict(sec=time.time() - t0, units=n)
-elif job in ("extract_files", "extract_sink"):
-    # Python-native scan paths (BENCH_LAYERS.md): tasks read their
-    # complete bucket parquet with pyarrow inside the worker; for
-    # extract_sink the result parquet is written worker-side too, so
-    # no quad bytes cross the JVM in either direction.
+elif job in ("extract_local", "extract_local_interp", "extract_sink"):
+    # Python-native scan over a pre-bucketed store (BENCH_LAYERS.md):
+    # tasks read their complete bucket parquet with pyarrow inside the
+    # worker; for extract_sink the result parquet is written
+    # worker-side too, so no quad bytes cross the JVM in either
+    # direction.
     from extract_cbd_shape_spark.operators.local_extract import (
         extract_store_files_to_store, local_bulk_extract_files,
         materialize_store)
+    vectorize = job != "extract_local_interp"
     wt, wm = kbo_members(spark, "/root/testdata/sf0.001")
     wt, wm = with_store_key(wt, wm)
     wsp = materialize_store(wt, wm, work + "/wstore")
     local_bulk_extract_files(
-        spark, wsp, shapes_graph=shapes, shape=shape).count()  # warm
+        spark, wsp, shapes_graph=shapes, shape=shape,
+        vectorize=vectorize).count()  # warm
+    # Ingest-time bucketing (materialize_store) is untimed: a corpus is
+    # bucketed once when it lands, extractions run many times. Fixed
+    # bucket count at BOTH levels: identical input bytes, and enough
+    # tasks per core (256/8 = 32 waves at the hi level) that last-wave
+    # stragglers don't distort the efficiency ratio.
     tl, ml = kbo_members(spark, sf_dir, replicate=kbo_rep)
     tl, ml = with_store_key(tl, ml)
     sp = materialize_store(tl, ml, work + "/store", n_buckets=256)
-    if job == "extract_files":
-        t0 = time.time()
-        n = local_bulk_extract_files(
-            spark, sp, shapes_graph=shapes, shape=shape,
-            store_distinct=True).count()
-    else:
-        t0 = time.time()
+    t0 = time.time()
+    if job == "extract_sink":
         n = extract_store_files_to_store(
             spark, sp, work + "/out", shapes_graph=shapes, shape=shape,
             store_distinct=True,
         ).agg(F.sum("rows")).collect()[0][0]
-    out = dict(sec=time.time() - t0, units=n)
-elif job in ("extract_local", "extract_local_interp"):
-    vectorize = job == "extract_local"
-    from extract_cbd_shape_spark.operators.local_extract import (
-        local_bulk_extract_prebucketed, materialize_store, read_store)
-    wt, wm = kbo_members(spark, "/root/testdata/sf0.001")
-    wt, wm = with_store_key(wt, wm)
-    wst = read_store(spark, materialize_store(wt, wm, work + "/wstore"))
-    local_bulk_extract_prebucketed(
-        wst, shapes_graph=shapes, shape=shape,
-        vectorize=vectorize).count()  # warm
-    # Ingest-time bucketing (materialize_store) is untimed: a corpus is
-    # bucketed once when it lands, extractions run many times. The
-    # timed job is the steady state: zero-shuffle scan -> kernel.
-    tl, ml = kbo_members(spark, sf_dir, replicate=kbo_rep)
-    tl, ml = with_store_key(tl, ml)
-    # Fixed bucket count at BOTH levels: identical input bytes, and
-    # enough tasks per core (256/8 = 32 waves at the hi level) that
-    # last-wave stragglers don't distort the efficiency ratio — the
-    # default (2x parallelism, min 64) left only 8 tasks/core at hi.
-    st = read_store(
-        spark, materialize_store(tl, ml, work + "/store", n_buckets=256)
-    )
-    t0 = time.time()
-    n = local_bulk_extract_prebucketed(
-        st, shapes_graph=shapes, shape=shape, vectorize=vectorize,
-        store_distinct=True).count()
+    else:
+        n = local_bulk_extract_files(
+            spark, sp, shapes_graph=shapes, shape=shape,
+            vectorize=vectorize, store_distinct=True).count()
     out = dict(sec=time.time() - t0, units=n)
 elif job == "pipeline":
     from extract_cbd_shape_spark.plans.pipeline import KGConstructionPipeline
@@ -286,12 +258,10 @@ JOBS = [
     ("extract_global_ctrl",
      "global engine, codegen off (CPU-bound control) (quads/s)"),
     ("extract_local",
-     "bulk shape extraction, pre-bucketed store, zero-shuffle (quads/s)"),
+     "bulk shape extraction, pre-bucketed store, zero-shuffle, "
+     "python-native scan (worker-side pyarrow read) (quads/s)"),
     ("extract_local_interp",
      "same dataflow, interpreter kernel (CPU-bound control) (quads/s)"),
-    ("extract_files",
-     "pre-bucketed store, python-native scan (worker-side pyarrow "
-     "read) (quads/s)"),
     ("extract_sink",
      "pre-bucketed store, sink-fused (worker-side read AND write; no "
      "quad bytes through the JVM) (quads/s)"),
@@ -319,8 +289,7 @@ JOBS = [
 # the OS give the rest to the workers. JVM-heavy jobs (fixpoint engine,
 # pipeline, minhash) keep the per-core heap model from bench.build_spark
 # (N -> 4N executors brings 4x heap on a cluster).
-KERNEL_JOBS = {"extract_local", "extract_local_interp", "extract_files",
-               "extract_sink"}
+KERNEL_JOBS = {"extract_local", "extract_local_interp", "extract_sink"}
 
 
 def _run_once(job: str, cpus: int) -> dict:

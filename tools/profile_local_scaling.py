@@ -10,7 +10,8 @@ cell (same methodology as tools/bench_scaling.py):
 * scan      — parquet scan -> count, JVM only (no Python anywhere).
 * arrow     — scan -> mapInArrow(pass-through batches) -> count: adds
               the JVM->Arrow->Python->Arrow->JVM boundary, no kernel.
-* kernel    — the real extraction (local_bulk_extract_prebucketed).
+* kernel    — the real extraction (local_bulk_extract_files: each task
+              reads its bucket file with pyarrow in the worker).
 * kernelnp  — the kernel body run OUTSIDE Spark: buckets pre-exported
               to Arrow record batches in RAM, then a multiprocessing
               pool runs _vec_extract_bucket per bucket.  Scaling of the
@@ -57,7 +58,7 @@ spark.sparkContext.setLogLevel("ERROR")
 from extract_cbd_shape_spark.operators.kgtriples import (
     kbo_members, with_store_key, KBO_SHAPE_TTL, KBO_SHAPE_IRI)
 from extract_cbd_shape_spark.operators.local_extract import (
-    local_bulk_extract_prebucketed, materialize_store, read_store)
+    local_bulk_extract_files, materialize_store)
 from extract_cbd_shape_spark.rdf import parse_trig
 from extract_cbd_shape_spark.shapes import ShapesGraph
 from extract_cbd_shape_spark.model import Term, IRI
@@ -70,7 +71,7 @@ work = tempfile.mkdtemp(
 tl, ml = kbo_members(spark, sf_dir, replicate=replicate)
 tl, ml = with_store_key(tl, ml)
 store_path = materialize_store(tl, ml, work + "/store", n_buckets=256)
-st = read_store(spark, store_path)
+st = spark.read.parquet(store_path)
 
 if layer == "scan":
     st.count()  # warm
@@ -88,12 +89,12 @@ elif layer == "arrow":
 elif layer == "kernel":
     wt, wm = kbo_members(spark, "/root/testdata/sf0.001")
     wt, wm = with_store_key(wt, wm)
-    wst = read_store(spark, materialize_store(wt, wm, work + "/wstore"))
-    local_bulk_extract_prebucketed(
-        wst, shapes_graph=shapes, shape=shape).count()  # warm
+    wsp = materialize_store(wt, wm, work + "/wstore")
+    local_bulk_extract_files(
+        spark, wsp, shapes_graph=shapes, shape=shape).count()  # warm
     t0 = time.time()
-    n = local_bulk_extract_prebucketed(
-        st, shapes_graph=shapes, shape=shape).count()
+    n = local_bulk_extract_files(
+        spark, store_path, shapes_graph=shapes, shape=shape).count()
     out = dict(sec=time.time() - t0, units=n)
 elif layer == "kernelnp":
     # Export every bucket to Arrow tables in RAM (untimed), then run the
@@ -106,10 +107,8 @@ elif layer == "kernelnp":
     spark.stop()
     global _NP_RUNNER
     from extract_cbd_shape_spark.operators import local_extract as lx
-    vec_plan = lx.compile_single_hop_links(shapes, shape)
-    _NP_RUNNER = lx._make_runner(
-        vec_plan, shapes, shape, (), True, False, "store_key", False,
-        lx.OUT_COLS)
+    _NP_RUNNER, _cols = lx._make_runner(
+        shapes, shape, "store_key", True, False, (), True, False, None)
     with mp.Pool(min(cpus, len(files))) as pool:
         t0 = time.time()
         res = pool.map(_np_run_file, files)
@@ -142,8 +141,8 @@ LAYER_LABELS = {
     "scan": "parquet scan -> count (JVM only, no Python)",
     "arrow": "scan -> mapInArrow pass-through -> count (adds the "
              "JVM<->Arrow<->Python boundary, no kernel)",
-    "kernel": "full extraction (scan -> Arrow -> CSR kernel -> Arrow -> "
-              "count)",
+    "kernel": "full extraction (worker-side pyarrow read -> CSR kernel "
+              "-> Arrow -> count)",
     "kernelnp": "kernel body alone, multiprocessing pool over bucket "
                 "files, ZERO Spark (pyarrow read untimed)",
 }
@@ -190,10 +189,6 @@ inside the Python worker (and, sink-fused, write output parquet there
 too), so the JVM never touches quad bytes — Spark schedules, retries,
 and tracks lineage only. See BENCH.md for the resulting rows.
 """)
-
-
-if __name__ == "__main__":
-    main()
 
 
 if __name__ == "__main__":
